@@ -12,7 +12,8 @@ All hot paths are declarative Spark expressions (JVM-side, codegen'd):
   oracle (CAST('0x…' AS BIGINT) + the same 64-bit-safe affine arithmetic:
   a·h < 2^62). A faster xxhash64 family remains for production scale.
 * SimHash            — 60-bit fingerprint from per-token md5-derived
-  integers, majority vote per bit; hamming-bucket candidate join.
+  integers, majority vote per bit computed inside the row (no shuffle);
+  hamming-bucket candidate join.
 * n-gram Jaccard     — exact similarity on shingle sets via an inverted-
   index join with **prefix filtering**: shingles are globally ordered by
   (document frequency, shingle) and only each document's prefix (the
@@ -22,9 +23,10 @@ All hot paths are declarative Spark expressions (JVM-side, codegen'd):
   verified exactly on the full shingle sets.
 
 * cluster resolution — connected components over the candidate-pair graph
-  (min-label propagation + pointer jumping, pure DataFrame joins) and a
-  keep-one ``dedup_keep_canonical`` output: one canonical row per near-dup
-  cluster, linear in cluster count where pair output is O(c²) per cluster.
+  (min-label propagation + pointer jumping: numpy on the driver for graphs
+  that fit one collect, DataFrame joins beyond) and a keep-one
+  ``dedup_keep_canonical`` output: one canonical row per near-dup cluster,
+  linear in cluster count where pair output is O(c²) per cluster.
 
 At 100 TB the LSH band join is the scale path: the band signature is the
 shuffle key, so each bucket is tiny and AQE's skew split handles pathological
@@ -35,8 +37,11 @@ cannot reach the overlap threshold never enter the exact verification.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 DEFAULT_N_HASHES = 16
 DEFAULT_BAND_SIZE = 4
@@ -56,6 +61,10 @@ FAMILY_B = [
     1640531527, 2463534242, 3266489917, 668265263,
 ]
 FAMILY_B = [b % MERSENNE31 for b in FAMILY_B]
+
+# connected_components labels candidate graphs up to this many edges (one
+# partition's worth on its iterative path) on the driver
+_DRIVER_CC_MAX_EDGES = 250_000
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -316,69 +325,47 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 30,
-    algorithm: str = "jump",
 ) -> DataFrame:
     """Connected components over a candidate-pair edge list → (id, comp)
-    where ``comp`` is the minimum vertex id of the component. Pure DataFrame
-    joins, no driver-side graph state.
+    where ``comp`` is the minimum vertex id of the component, typed as the
+    input ids.
 
-    ``algorithm="jump"`` (default) is min-label propagation + pointer
-    jumping — fastest on realistic near-dup graphs (diameter ≤ ~5).
-    ``algorithm="star"`` is the alternating large-star/small-star algorithm
-    (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
-    2014) whose round count is O(log² n) independent of graph STRUCTURE —
-    the safety valve for adversarial diameters where pointer jumping's
-    per-round O(log diameter) constant stacks up (see BENCH.md stress
-    table). Both return the identical (id, comp) labeling.
+    A graph of at most ``_DRIVER_CC_MAX_EDGES`` edges (a few MB) is pulled
+    to the driver in ONE Arrow collect and labelled with numpy (min-label
+    propagation + pointer jumping to fixpoint). Each iterative round costs
+    several Spark jobs of tiny tasks, so a few-hundred-edge near-dup graph
+    spent seconds in scheduling there; the driver labelling costs one job.
 
-    Each iteration does (a) a min-label propagation step (every vertex takes
-    the min of its own and its neighbors' labels) and (b) a pointer-jumping
-    step (``comp ← comp[comp]``), so convergence is O(log diameter), not
+    Larger graphs iterate as DataFrame joins: each iteration does (a) a
+    min-label propagation step (every vertex takes the min of its own and
+    its neighbors' labels) and (b) a pointer-jumping step
+    (``comp ← comp[comp]``), so convergence is O(log diameter), not
     O(diameter) — a 10k-document chain resolves in ~14 iterations. Labels are
     ``localCheckpoint``-ed each iteration to truncate the exponentially
     growing self-join lineage (at cluster scale with lost-executor risk,
     point ``spark.sparkContext.setCheckpointDir`` at durable storage and swap
     in ``checkpoint()``); convergence is detected by the exact decimal sum of
     labels, which strictly decreases until fixpoint — one vertex-sized
-    aggregate per iteration, no extra join.
+    aggregate per iteration, no extra join. AQE stays on: its skew split of
+    the neighbor join is the scale safety valve.
 
     Beyond-reference operator (the reference has no graph ops): this is the
     cluster-resolution step that keeps near-dup output linear in cluster
     count where pair output is O(c²) per cluster."""
-    if algorithm == "star":
-        return _connected_components_star(pairs, src, dst, max_iter)
-    if algorithm != "jump":
-        raise ValueError(f"unknown connected-components algorithm {algorithm!r}")
-    # one cheap count sizes the iteration partitioning: a 255-edge candidate
-    # graph must not pay 32-partition shuffle scheduling per iteration, and a
-    # 10^10-edge graph must not funnel into one task. Upstream pair sources
-    # (lsh/simhash/ngram) return persisted DataFrames, so the count is free.
-    n_edges = pairs.count()
     spark = pairs.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    parts = max(1, min(4 * par, n_edges // 250_000 + 1))
-    # tiny-graph fast path: with a single edge partition AQE has nothing to
-    # adapt (no skew to split, nothing to coalesce) but still inserts a
-    # materialization boundary at every exchange of every iteration —
-    # measured ~1.5× the per-iteration wall on bench-scale graphs. At
-    # parts > 1 AQE stays on (skew-split of the neighbor join is the scale
-    # safety valve). Restored in the finally even on non-convergence.
-    aqe_off = parts == 1
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if aqe_off:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # ... and with AQE off, the loop's joins/aggregates would otherwise
-        # shuffle into spark.sql.shuffle.partitions tiny tasks per stage;
-        # pin them to the edge partition count for the loop's duration
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    sym = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).dropna()
+    head = sym.limit(_DRIVER_CC_MAX_EDGES + 1).toPandas()
+    if len(head) <= _DRIVER_CC_MAX_EDGES:
+        return _components_on_driver(spark, head, sym.schema["u"].dataType)
+    # one edge partition per 250k edges, capped at 4 waves of the cluster
+    n_edges = pairs.count()
+    parts = min(4 * spark.sparkContext.defaultParallelism, n_edges // 250_000 + 1)
+    edges = (
+        sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .repartition(parts, "v")
+        .persist()
+    )
     try:
-        sym = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        edges = (
-            sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .repartition(parts, "v")
-            .persist()
-        )
         labels = (
             edges.select(F.col("u").alias("id"))
             .distinct()
@@ -405,11 +392,8 @@ def connected_components(
                 converged = True
                 break
             prev = s
-        edges.unpersist()
     finally:
-        if aqe_off:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        edges.unpersist()
     if not converged:
         # silently-unconverged labels would merge downstream clusters on
         # wrong components with no signal (ADVICE r5) — fail loudly; with
@@ -423,82 +407,27 @@ def connected_components(
     return labels
 
 
-def _connected_components_star(
-    pairs: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al. 2014). Edges are kept canonical (u > v); one round is
-
-    * **large-star**: per node ``u`` over its full neighborhood, attach
-      every strictly-larger neighbor ``w`` to ``m = min(N(u) ∪ {u})`` —
-      emits ``(w, m)``;
-    * **small-star**: per larger-endpoint ``u`` of the canonical edges,
-      ``m = min(N(u))``; attach ``u`` and every other smaller neighbor to
-      ``m``.
-
-    Both steps only ever re-attach a vertex to something ≤ its current
-    neighbor, and the paper proves the edge set becomes a set of
-    min-rooted stars in O(log² n) rounds regardless of structure — this is
-    the variant to reach for on adversarial-diameter graphs where pointer
-    jumping's per-round join count stacks up. Convergence is detected
-    EXACTLY (count equality + anti-join emptiness vs the previous round's
-    edge set): a one-hop label-sum fixpoint is not sound here because an
-    edge rewire two hops from every vertex's current minimum leaves the
-    label sum unchanged while the star structure is still forming."""
-    e0 = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    verts = (
-        e0.select(F.col("a").alias("id"))
-        .unionByName(e0.select(F.col("b").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e = (
-        e0.where(F.col("a") != F.col("b"))
-        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_e = e.count()
-    converged = n_e == 0
-    for _ in range(max_iter):
-        if converged:
+def _components_on_driver(spark, edges: pd.DataFrame, id_type) -> DataFrame:
+    """Label an ``(u, v)`` edge frame held on the driver: vertices are
+    ranked by id (``np.unique``), so the min rank of a component is its min
+    id. Min-label propagation over both edge directions plus pointer
+    jumping, repeated until no label moves."""
+    ends = np.concatenate([edges["u"].to_numpy(), edges["v"].to_numpy()])
+    ids, inv = np.unique(ends, return_inverse=True)
+    a, b = inv[: len(edges)], inv[len(edges) :]
+    label = np.arange(len(ids))
+    while True:
+        prev = label.copy()
+        np.minimum.at(label, a, label[b])
+        np.minimum.at(label, b, label[a])
+        # labels only point down (label[i] <= i), so jumping converges
+        jumped = label[label]
+        while not np.array_equal(jumped, label):
+            label, jumped = jumped, jumped[jumped]
+        if np.array_equal(label, prev):
             break
-        # large-star over the symmetric view
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        mins = mins.select("u", F.least("u", "mn").alias("m"))
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star on the canonical (u > v) edges
-        j = large.join(large.groupBy("u").agg(F.min("v").alias("m")), "u")
-        new = (
-            j.where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(j.select("u", F.col("m").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=False)  # the count below materializes it
-        )
-        n_new = new.count()
-        converged = n_new == n_e and (
-            new.join(e, ["u", "v"], "left_anti").limit(1).count() == 0
-        )
-        e, n_e = new, n_new
-    if not converged:
-        raise RuntimeError(
-            f"connected_components(star) did not converge in max_iter={max_iter} "
-            "rounds; raise max_iter (large-star/small-star converges in "
-            "O(log² n) rounds)"
-        )
-    # fixpoint edge set = min-rooted stars: u → comp directly
-    star = e.select(F.col("u").alias("id"), F.col("v").alias("comp"))
-    return verts.join(star, "id", "left").select(
-        "id", F.coalesce("comp", F.col("id")).alias("comp")
-    )
+    schema = StructType([StructField("id", id_type), StructField("comp", id_type)])
+    return spark.createDataFrame(pd.DataFrame({"id": ids, "comp": ids[label]}), schema)
 
 
 def cluster_assign(
@@ -538,26 +467,29 @@ def dedup_keep_canonical(
 
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 60) -> DataFrame:
     """60-bit SimHash: per-token hash from md5 hex (first 15 nibbles → long),
-    per-bit majority vote across tokens. (id, simhash long)."""
+    per-bit majority vote across tokens. (id, simhash long), one row per
+    document with non-NULL text."""
     from maplibre_tile_spec_spark.operators.text import spread_small_scan
 
-    # the per-token md5 runs upstream of the vote's exchange — on a
-    # single-row-group scan it would serialize through one task
+    # the per-token md5 and the vote are all per-row work — on a
+    # single-row-group scan they would serialize through one task
     docs = spread_small_scan(docs)
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     tok_hash = F.transform(toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"))
-    base = docs.select(F.col(id_col).alias("id"), F.explode(tok_hash).alias("h"))
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(bits)
-    ]
-    agg = base.groupBy("id").agg(*bit_sums)
-    sim = F.lit(0).cast("long")
-    for i in range(bits):
-        sim = sim.bitwiseOR(F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long")).otherwise(0) * F.lit(2**i).cast("long"))
-    return agg.select("id", sim.alias("simhash"))
+    # the vote runs inside the row (no explode, no exchange, no per-bit
+    # aggregate buffers); SQL because PySpark's shiftrightunsigned only
+    # takes a literal shift
+    vote = F.expr(
+        f"aggregate(sequence(0, {bits - 1}), 0L, (acc, i) -> acc | IF("
+        "aggregate(_hs, 0, (n, h) -> n + IF((shiftrightunsigned(h, i) & 1) = 1, 1, -1)) > 0, "
+        "shiftleft(1L, i), 0L))"
+    )
+    # NULL text has no tokens and no fingerprint (size(NULL) is never > 0)
+    return (
+        docs.select(F.col(id_col).alias("id"), tok_hash.alias("_hs"))
+        .filter(F.size("_hs") > 0)
+        .select("id", vote.alias("simhash"))
+    )
 
 
 def simhash_near_pairs(

@@ -48,8 +48,6 @@ from pyspark.sql import functions as F
 
 from maplibre_tile_spec_spark.operators import dedup
 
-DEFAULT_N_BUCKETS = 64
-
 
 def ensure_store_table(spark, suffix: str, location: str = "/tmp/mlt_band_stores") -> str:
     """Create (if needed) the catalog database holding band-store tables at
@@ -117,7 +115,7 @@ def minhash_band_table(
 def write_band_store(
     bands: DataFrame,
     table: str,
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Persist a band table **bucketed and sorted by (band, sig)**.
@@ -130,21 +128,27 @@ def write_band_store(
     files per bucket; the join stays Exchange-free, at the cost of a
     per-bucket merge sort). Appends inherit the EXISTING table's bucket
     count — Spark refuses mismatched bucketing, and the caller appending a
-    delta should never have to re-state the layout chosen at bootstrap."""
-    if mode == "append":
-        spark = bands.sparkSession
-        if spark.catalog.tableExists(table):
-            for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
-                if r.col_name.strip() == "Num Buckets":
-                    n_buckets = int(r.data_type)
-                    break
+    delta should never have to re-state the layout chosen at bootstrap.
+
+    The bootstrap default is two buckets per core of the cluster
+    (``2 × defaultParallelism``): every bucket is one task of the store
+    write and of each bucketed probe stage, so a count sized to another
+    cluster either leaves cores idle or queues waves of tiny tasks."""
+    spark = bands.sparkSession
+    if mode == "append" and spark.catalog.tableExists(table):
+        for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
+            if r.col_name.strip() == "Num Buckets":
+                n_buckets = int(r.data_type)
+                break
+    if n_buckets is None:
+        n_buckets = 2 * spark.sparkContext.defaultParallelism
     # repartition to the bucket count ON the bucket columns before the write:
     # repartition's HashPartitioning and bucketBy's bucket-id assignment are
     # the same murmur3-pmod hash, so each write task holds exactly one
     # bucket's rows and emits ONE file per bucket. Without it every upstream
-    # task writes a file per bucket it touches — tasks×buckets tiny files
-    # (4096 at the bench's 64×64), which dominated both the write commit and
-    # every later bucketed scan of the store.
+    # task writes a file per bucket it touches — tasks×buckets tiny files,
+    # which dominated both the write commit and every later bucketed scan of
+    # the store.
     (
         bands.repartition(n_buckets, "band", "sig")
         .write.mode(mode)
@@ -208,14 +212,15 @@ def lsh_dedup_incremental(
     )
     # contract old docs to their standing cluster labels (= component min id)
     cm = cluster_map.select(F.col("id").alias("m_id"), F.col("cluster_id").alias("old_cluster"))
-    no_edges = probe.join(cm, probe["old_id"] == cm["m_id"]).select(
-        F.col("new_id").alias("doc_a"), F.col("old_cluster").alias("doc_b")
+    # persist: connected_components reads the probe edges once and the
+    # touched-cluster set below reads them again
+    no_edges = (
+        probe.join(cm, probe["old_id"] == cm["m_id"])
+        .select(F.col("new_id").alias("doc_a"), F.col("old_cluster").alias("doc_b"))
+        .persist()
     )
     nn_edges = dedup.pairs_from_bands(new_bands)
-    # persist: connected_components sizes its partitioning with a count()
-    # and re-reads the edges every iteration
-    edges = no_edges.unionByName(nn_edges).persist()
-    comp = dedup.connected_components(edges, max_iter=max_iter)
+    comp = dedup.connected_components(no_edges.unionByName(nn_edges), max_iter=max_iter)
     touched = no_edges.select(F.col("doc_b").alias("oc")).distinct()
     # standing labels whose component min changed — new smaller-id member
     # or a bridge to a smaller-labeled cluster
@@ -232,14 +237,14 @@ def lsh_dedup_incremental(
         new_ids.join(comp.withColumnRenamed("id", "_c_id"), new_ids["id"] == F.col("_c_id"), "left")
         .select("id", F.coalesce("comp", "id").alias("cluster_id"))
     )
-    # materialize through the persisted edges, then release them; comp is
-    # localCheckpoint-ed inside connected_components so nothing re-reads
+    # materialize through the persisted probe edges, then release them;
+    # comp is a driver-built or checkpointed frame, so nothing re-reads the
     # edges afterwards
     new_assign = new_assign.persist()
     remap = remap.persist()
     new_assign.count()
     remap.count()
-    edges.unpersist()
+    no_edges.unpersist()
     return IncrementalDedup(new_assign=new_assign, remap=remap, new_bands=new_bands)
 
 

@@ -180,6 +180,70 @@ class TestClusterResolution:
         out.unpersist()
 
 
+@pytest.fixture(params=["driver", "distributed"])
+def cc_path(request, monkeypatch):
+    """Run connected_components on the driver-side labelling (every graph
+    here fits) or, with the driver gate at 0 edges, on the iterative
+    DataFrame path."""
+    if request.param == "distributed":
+        monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", 0)
+    return request.param
+
+
+class TestComponentPaths:
+    """Both connected-components paths label every graph shape exactly as
+    the union-find oracle does, and neither leaves state behind."""
+
+    def test_chain_random_and_self_loop_match_union_find(self, spark, cc_path):
+        import random
+
+        rng = random.Random(42)
+        # adversarial chain (high diameter) + random sparse graph + self loop
+        chain = [(i, i + 1) for i in range(300)]
+        rand = [(rng.randrange(500, 900), rng.randrange(500, 900)) for _ in range(400)]
+        edges = chain + rand + [(1000, 1000)]
+        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        verts = {v for e in edges for v in e}
+        got = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
+        assert got == _union_find(edges, verts)
+
+    def test_lsh_pairs_match_union_find(self, spark, docs, cc_path):
+        pairs = dedup.lsh_candidate_pairs(docs)
+        edge_rows = [(r.doc_a, r.doc_b) for r in pairs.collect()]
+        verts = {v for e in edge_rows for v in e}
+        got = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
+        pairs.unpersist()
+        assert got == _union_find(edge_rows, verts)
+
+    def test_keeps_input_id_type(self, spark, cc_path):
+        pairs = spark.createDataFrame([(3, 2), (2, 7)], "doc_a int, doc_b int")
+        out = dedup.connected_components(pairs)
+        assert [f.dataType.simpleString() for f in out.schema] == ["int", "int"]
+        assert {(r.id, r.comp) for r in out.collect()} == {(2, 2), (3, 2), (7, 2)}
+
+    def test_session_confs_unchanged(self, spark, cc_path):
+        keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+        before = {k: spark.conf.get(k) for k in keys}
+        pairs = spark.createDataFrame([(i, i + 1) for i in range(20)], "doc_a long, doc_b long")
+        dedup.connected_components(pairs).collect()
+        assert {k: spark.conf.get(k) for k in keys} == before
+
+    def test_error_path_releases_edges(self, spark, monkeypatch):
+        """A failure inside the iterative loop still drops the persisted
+        edge list from the cache."""
+
+        def lost(self, eager=True):
+            raise RuntimeError("checkpoint lost")
+
+        spark.catalog.clearCache()
+        pairs = spark.createDataFrame([(i, i + 1) for i in range(40)], "doc_a long, doc_b long")
+        monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", 0)
+        monkeypatch.setattr(type(pairs), "localCheckpoint", lost)
+        with pytest.raises(RuntimeError, match="checkpoint lost"):
+            dedup.connected_components(pairs)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 class TestSimhash:
     def test_near_pairs_match_bruteforce(self, spark, docs):
         sub = docs.filter((F.col("doc_id") < 50) | (F.col("doc_id") >= 100000)).cache()
@@ -197,6 +261,30 @@ class TestSimhash:
         # pigeonhole blocking is exact for hamming ≤ 3 with 4 blocks
         assert got == expected
         assert any((i, i + 200000) in got for i in range(3))
+
+    @staticmethod
+    def _reference(text, bits=60):
+        """Pure-Python SimHash: Spark's lower(trim(text)) split on \\s+,
+        per-token md5 → first 15 hex nibbles as an int, ±1 vote per bit."""
+        import hashlib
+        import re
+
+        toks = re.split(r"\s+", text.strip(" ").lower())
+        hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in toks]
+        votes = [sum(1 if (h >> i) & 1 else -1 for h in hs) for i in range(bits)]
+        return sum(1 << i for i, v in enumerate(votes) if v > 0)
+
+    def test_matches_pure_python_reference(self, spark, docs):
+        extra = spark.createDataFrame(
+            [(900001, None), (900002, ""), (900003, "  Mixed CASE  text ")],
+            "doc_id long, text string",
+        )
+        sub = docs.filter(F.col("doc_id") < 50).select("doc_id", "text").unionByName(extra)
+        rows = sub.collect()
+        got = {r.id: r.simhash for r in dedup.simhash(sub).collect()}
+        # NULL text has no fingerprint; empty text is one empty token
+        assert set(got) == {r.doc_id for r in rows if r.text is not None}
+        assert got == {r.doc_id: self._reference(r.text) for r in rows if r.text is not None}
 
 
 class TestSimilarity:
@@ -444,6 +532,30 @@ class TestIncrementalDedup:
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
 
+    @staticmethod
+    def _num_buckets(spark, table):
+        rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
+        return next(int(r.data_type) for r in rows if r.col_name.strip() == "Num Buckets")
+
+    def test_store_buckets_follow_cluster(self, spark, split):
+        """A bootstrap store gets two buckets per core; appends inherit the
+        table's count whatever the cluster size."""
+        from maplibre_tile_spec_spark.operators import dedup_incremental as DI
+
+        _, old, new = split
+        par = spark.sparkContext.defaultParallelism
+        table = DI.ensure_store_table(spark, "pytest_inc_layout")
+        DI.write_band_store(DI.minhash_band_table(old), table)
+        assert self._num_buckets(spark, table) == 2 * par
+        DI.write_band_store(DI.minhash_band_table(new), table, mode="append")
+        assert self._num_buckets(spark, table) == 2 * par
+        table3 = DI.ensure_store_table(spark, "pytest_inc_layout3")
+        DI.write_band_store(DI.minhash_band_table(old), table3, n_buckets=3)
+        DI.write_band_store(DI.minhash_band_table(new), table3, mode="append")
+        assert self._num_buckets(spark, table3) == 3
+        spark.catalog.refreshTable(table)
+        assert spark.table(table).count() == DI.minhash_band_table(old.unionByName(new)).count()
+
     def test_incremental_never_scans_old_documents(self, spark, split, tmp_path):
         """Production shape: standing state on disk (band store + cluster
         map parquet), batch on disk. The incremental update's physical plan
@@ -523,60 +635,6 @@ class TestIncrementalDedup:
         want_df.unpersist()
         cmap.unpersist()
         assert got == want
-
-
-class TestStarComponents:
-    """VERDICT r5 #6: large-star/small-star variant — identical labels to
-    pointer jumping and the union-find oracle on every graph shape."""
-
-    def test_star_matches_union_find_on_lsh_pairs(self, spark, docs):
-        pairs = dedup.lsh_candidate_pairs(docs)
-        edge_rows = [(r.doc_a, r.doc_b) for r in pairs.collect()]
-        verts = {v for e in edge_rows for v in e}
-        expect = _union_find(edge_rows, verts)
-        got = {
-            r.id: r.comp
-            for r in dedup.connected_components(pairs, algorithm="star").collect()
-        }
-        assert got == expect
-        pairs.unpersist()
-
-    def test_star_chain_and_random_match_jump(self, spark):
-        import random
-
-        rng = random.Random(42)
-        # adversarial chain (high diameter) + random sparse graph + self loops
-        chain = [(i, i + 1) for i in range(300)]
-        rand = [(rng.randrange(500, 900), rng.randrange(500, 900)) for _ in range(400)]
-        edges = chain + rand + [(1000, 1000)]
-        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        verts = {v for e in edges for v in e}
-        expect = _union_find(edges, verts)
-        star = {
-            r.id: r.comp
-            for r in dedup.connected_components(pairs, algorithm="star").collect()
-        }
-        jump = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
-        assert star == expect
-        assert jump == expect
-
-    def test_star_converges_in_few_rounds_on_chain(self, spark):
-        # O(log² n) structure-independence: a 400-diameter chain must
-        # resolve well within 15 rounds (pointer jumping needs ~log2(400)=9
-        # label rounds; star needs ~log rounds too but per-round cost is
-        # structure-independent)
-        edges = [(i, i + 1) for i in range(400)]
-        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = {
-            r.id: r.comp
-            for r in dedup.connected_components(pairs, algorithm="star", max_iter=15).collect()
-        }
-        assert got == {i: 0 for i in range(401)}
-
-    def test_unknown_algorithm_raises(self, spark):
-        pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-        with pytest.raises(ValueError, match="algorithm"):
-            dedup.connected_components(pairs, algorithm="bogus")
 
 
 class TestStreamingIncrementalDedup:

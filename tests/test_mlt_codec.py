@@ -445,6 +445,7 @@ class TestFsstByteParity:
 
 
 class TestInspect:
+    @requires_fixtures
     def test_inspect_matches_decode(self):
         buf = open(f"{FIXTURE_DIR}/point-boolean.mlt", "rb").read()
         recs = C.inspect_tile(buf)
