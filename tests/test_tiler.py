@@ -1,5 +1,9 @@
 """Distributed tiler: membership round-trip + salt-invariance + span invariant."""
 
+import hashlib
+import json
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -11,10 +15,77 @@ from maplibre_tile_spec_spark.operators.invariants import assert_span_sequence_e
 from maplibre_tile_spec_spark.sources import synth
 
 
+ANCHORS = os.path.join(os.path.dirname(__file__), "data", "tiler_anchors.json")
+
+
 @pytest.fixture(scope="module")
 def feats(spark):
     docs = synth.synthesize_documents(spark, 400, seed=42).cache()
     return docs, FE.extract_features(docs).cache()
+
+
+def _themed(features):
+    return features.withColumn(
+        "layer",
+        F.when(F.col("geom_type").isin(1, 4), "poi")
+        .when(F.col("geom_type").isin(2, 5), "road")
+        .otherwise("land"),
+    )
+
+
+#: tiler calls whose output bytes are pinned in tests/data/tiler_anchors.json:
+#: plain, hot-tile fan-out, layer blocks, doc refs, and the clipped tiler
+#: with and without buffer and with salted parts
+ANCHOR_CALLS = {
+    "encode_tiles(zoom=8)": lambda f: tiler.encode_tiles(f, zoom=8),
+    "encode_tiles(zoom=0, salt_target=n//8)": lambda f: tiler.encode_tiles(
+        f, zoom=0, salt_target=max(1, f.count() // 8)
+    ),
+    "encode_tiles(zoom=5, layer_col)": lambda f: tiler.encode_tiles(
+        _themed(f), zoom=5, layer_col="layer"
+    ),
+    "encode_tiles(zoom=4, include_doc_refs)": lambda f: tiler.encode_tiles(
+        f, zoom=4, include_doc_refs=True
+    ),
+    "encode_tiles_clipped(zoom=7, buffer=64)": lambda f: tiler.encode_tiles_clipped(
+        f, zoom=7, buffer=64
+    ),
+    "encode_tiles_clipped(zoom=7, buffer=0)": lambda f: tiler.encode_tiles_clipped(
+        f, zoom=7, buffer=0
+    ),
+    "encode_tiles_clipped(zoom=3, salt_target=20)": lambda f: tiler.encode_tiles_clipped(
+        f, zoom=3, salt_target=20
+    ),
+}
+
+
+def tile_digest(tiles) -> dict:
+    """Tile count, feature and byte totals, and one sha256 over the sorted
+    (z, x, y, n_features, n_vertices, byte_size, sha256(tile)) rows."""
+    rows = sorted(
+        (r.z, r.x, r.y, r.n_features, r.n_vertices, r.byte_size, hashlib.sha256(bytes(r.tile)).hexdigest())
+        for r in tiles.collect()
+    )
+    text = "\n".join(",".join(str(v) for v in row) for row in rows)
+    return {
+        "tiles": len(rows),
+        "features": sum(r[3] for r in rows),
+        "bytes": sum(r[5] for r in rows),
+        "sha256": hashlib.sha256(text.encode()).hexdigest(),
+    }
+
+
+class TestTileByteAnchors:
+    """Tile bytes of both tilers are pinned by committed anchors, so a
+    refactor of the tile write path is checked byte for byte."""
+
+    @pytest.mark.parametrize("call", sorted(ANCHOR_CALLS))
+    def test_tile_bytes_match_anchor(self, spark, feats, call):
+        _, features = feats
+        with open(ANCHORS) as f:
+            want = json.load(f)[call]
+        got = tile_digest(ANCHOR_CALLS[call](features))
+        assert got == want, f"{call}: {got} != anchor {want}"
 
 
 class TestEncodeTiles:
@@ -89,15 +160,7 @@ class TestEncodeTiles:
 class TestMultiLayer:
     def test_thematic_layers(self, spark, feats):
         _, features = feats
-        from pyspark.sql import functions as F
-
-        themed = features.withColumn(
-            "layer",
-            F.when(F.col("geom_type").isin(1, 4), "poi")
-            .when(F.col("geom_type").isin(2, 5), "road")
-            .otherwise("land"),
-        )
-        tiles = tiler.encode_tiles(themed, zoom=5, layer_col="layer").cache()
+        tiles = tiler.encode_tiles(_themed(features), zoom=5, layer_col="layer").cache()
         row = tiles.orderBy(F.desc("n_features")).first()
         layers = C.decode_tile(bytes(row.tile))
         names = sorted({la.name for la in layers})
