@@ -160,13 +160,21 @@ def np_tile_xy(lon: np.ndarray, lat: np.ndarray, z: int) -> tuple[np.ndarray, np
     return np.clip(x, 0, 2**z - 1), np.clip(y, 0, 2**z - 1)
 
 
-def np_quantize_to_extent(
-    lon: np.ndarray, lat: np.ndarray, x: np.ndarray, y: np.ndarray, z: int, extent: int = 4096
+def np_extent_coords(
+    lon: np.ndarray, lat: np.ndarray, x: np.ndarray | int, y: np.ndarray | int, z: int, extent: int = 4096
 ) -> tuple[np.ndarray, np.ndarray]:
+    """Tile-local extent coords, unfloored and unclamped (may fall outside [0, extent))."""
     n = float(2**z)
     fx = (lon + 180.0) / 360.0 * n
     rad = np.radians(lat)
     fy = (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / math.pi) / 2.0 * n
-    qx = np.floor((fx - x) * extent).astype(np.int64)
-    qy = np.floor((fy - y) * extent).astype(np.int64)
+    return (fx - x) * extent, (fy - y) * extent
+
+
+def np_quantize_to_extent(
+    lon: np.ndarray, lat: np.ndarray, x: np.ndarray | int, y: np.ndarray | int, z: int, extent: int = 4096
+) -> tuple[np.ndarray, np.ndarray]:
+    ex, ey = np_extent_coords(lon, lat, x, y, z, extent)
+    qx = np.floor(ex).astype(np.int64)
+    qy = np.floor(ey).astype(np.int64)
     return np.clip(qx, 0, extent - 1), np.clip(qy, 0, extent - 1)

@@ -39,8 +39,9 @@ def extract_geom_spans(docs: DataFrame) -> DataFrame:
 
 _TYPE_CODE_MAP = {name: code for name, code in W.TYPE_CODES.items()}
 
-#: numeric WKT token (shared by the batch parser's one-pass extraction)
-_NUM_RE = re.compile(r"-?[0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?")
+#: numeric WKT token, or the "\n" row separator of the batch parser's
+#: one-pass extraction (the separators let it check token counts per row)
+_TOKEN_RE = re.compile(r"-?[0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?|\n")
 
 #: first "lon lat" pair after the opening paren — the representative point
 #: (identical to ``_parse_batch``'s rep, which is the first vertex for every
@@ -111,16 +112,27 @@ def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         # boundary "),(" contributes one comma and joins two vertex runs),
         # so per-row token counts come from a C-level str.count and the
         # tokens themselves from ONE regex pass over the joined batch —
-        # ~2× the old per-row findall. Any malformed row (3D coords, EMPTY)
-        # breaks the total-count identity and drops the whole remainder to
-        # the per-row path below. Coordinate counts are always even, so x/y
-        # are the global even/odd positions; per-row reduction is reduceat.
+        # ~2× the old per-row findall. The pass also matches each row's
+        # "\n" terminator, so every row's count is checked, not just the
+        # batch total: a row with a stray token next to a row missing one
+        # would otherwise cancel out and shift the coordinates between
+        # them. Any malformed row (3D coords, EMPTY, a newline inside the
+        # WKT) drops the whole remainder to the per-row path below.
+        # Coordinate counts are always even, so x/y are the global
+        # even/odd positions; per-row reduction is reduceat.
         rest = wkts.iloc[rest_idx]
         commas = np.fromiter((s.count(",") for s in rest), dtype=np.int64, count=rest_idx.shape[0])
         counts = 2 * (commas + 1)
-        toks = _NUM_RE.findall("\n".join(rest))
-        if len(toks) == int(counts.sum()):
-            allf = np.fromiter(map(float, toks), dtype=np.float64, count=len(toks))
+        joined = "\n".join(rest) + "\n"
+        toks = _TOKEN_RE.findall(joined)
+        seps = np.cumsum(counts + 1) - 1  # where each row's "\n" must sit
+        if (
+            len(toks) == int(seps[-1]) + 1
+            and joined.count("\n") == seps.shape[0]
+            and all(toks[i] == "\n" for i in seps.tolist())
+        ):
+            nums = [t for t in toks if t != "\n"]
+            allf = np.fromiter(map(float, nums), dtype=np.float64, count=len(nums))
             xs = allf[0::2]
             ys = allf[1::2]
             voffs = np.concatenate(([0], np.cumsum(counts // 2)[:-1]))
@@ -131,8 +143,8 @@ def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
             x1[rest_idx] = np.maximum.reduceat(xs, voffs)
             y1[rest_idx] = np.maximum.reduceat(ys, voffs)
         else:
-            # token total disagrees with the comma-count identity (3D
-            # coords, EMPTY geometry, stray token): a misaligned global
+            # a row's token count disagrees with the comma-count identity
+            # (3D coords, EMPTY geometry, stray token): a misaligned global
             # even/odd split would corrupt every row after the bad one —
             # fall back to the structural per-row parser for the whole
             # remainder, which raises on the offending row instead

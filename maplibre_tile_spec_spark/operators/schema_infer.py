@@ -71,10 +71,6 @@ def unify(observations: DataFrame) -> DataFrame:
     return flags.select("prop", unified.alias("unified_type"), F.col("n_obs").cast("long"))
 
 
-def infer_from_json(df: DataFrame, json_col: str) -> DataFrame:
-    return unify(observations_from_json(df, json_col))
-
-
 UNIFY_SQL_CASE = """
 CASE WHEN has_str = 1 THEN 'string'
      WHEN has_bool = 1 AND (has_dbl + has_i64 + has_i32) > 0 THEN 'string'

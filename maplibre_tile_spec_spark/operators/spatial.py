@@ -45,6 +45,10 @@ EARTH_CIRCUMFERENCE_KM = 40075.017
 
 PIP_COVER_SCHEMA = "poly_id string, level int, cx int, cy int"
 
+#: cover defaults shared by ``polygon_cover`` and both ``pip_join`` branches
+PIP_COVER_MAX_CELLS = 64
+PIP_COVER_COMPACT = True
+
 
 def _cover_rows(
     poly_id: str, wkt: str, lv: list[int], lv_set: set[int], max_cells: int, compact: bool
@@ -64,8 +68,8 @@ def _cover_rows(
 def polygon_cover(
     polys: DataFrame,
     levels: tuple[int, ...] = (4, 6, 8, 10, 12),
-    max_cells: int = 64,
-    compact: bool = True,
+    max_cells: int = PIP_COVER_MAX_CELLS,
+    compact: bool = PIP_COVER_COMPACT,
 ) -> DataFrame:
     """(poly_id, level, cx, cy) bbox-cover cells, each polygon at the finest
     allowed level whose cover stays ≤ max_cells (snapped down to ``levels``).
@@ -167,13 +171,17 @@ def pip_join(
         cover_cells = []
         for r in poly_rows:
             cover_cells.extend(
-                _cover_rows(r["poly_id"], r["geom_wkt"], lv0, set(lv0), 64, True)
+                _cover_rows(
+                    r["poly_id"], r["geom_wkt"], lv0, set(lv0), PIP_COVER_MAX_CELLS, PIP_COVER_COMPACT
+                )
             )
         cover = F.broadcast(
             polys.sparkSession.createDataFrame(cover_cells, PIP_COVER_SCHEMA)
         )
     else:
-        cover = polygon_cover(polys, levels=levels)
+        cover = polygon_cover(
+            polys, levels=levels, max_cells=PIP_COVER_MAX_CELLS, compact=PIP_COVER_COMPACT
+        )
 
     # one scan, one hash join: compute the finest-level cell once, derive each
     # coarser level's cell by a right-shift, explode (level, cx, cy) structs

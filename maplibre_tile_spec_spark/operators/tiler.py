@@ -1,19 +1,24 @@
 """Distributed MVT→MLT-style tiling: documents → MLT tiles.
 
 The reference encodes one tile per process iteration
-(java/mlt-cli/.../Encode.java:538-560); here the same per-tile computation is
-an Arrow-batched per-partition kernel (explicit repartition on the group
-keys + ``mapInPandas`` with one in-process groupby — per-group
-``applyInPandas`` dispatch cost 2× on small-tile corpora) running in
-parallel across executors, with **adaptive salt fan-out for hot tiles**: each tile's salt
-count derives from its own feature count (``n_salt="auto"``, the default —
-a cheap pre-aggregate joined back), so dense urban tiles split into
-bounded sub-groups, each encoded as an independent FeatureTable block and
-merged by byte concatenation — valid because MLT tiles are defined as
-concatenations of independently-decodable framed blocks
-(specification.md:38,92-99). AQE only splits join/aggregate shuffles, not a
-single giant applyInPandas group, so the salt is load-bearing at scale
-(SURVEY.md §7.3).
+(java/mlt-cli/.../Encode.java:538-560); here the same per-tile computation
+runs in parallel across executors. Both tilers — ``encode_tiles`` (each
+feature in the tile of its representative point) and
+``encode_tiles_clipped`` (each feature clipped into every tile its bbox
+touches) — own only their tile-assignment projection and their group
+builder. Everything else is one pipeline, ``_assemble_tiles``: salt, a
+sorted exchange on the group keys, one Arrow-batched ``mapInPandas`` kernel
+that streams group after group (per-group ``applyInPandas`` dispatch cost 2×
+on small-tile corpora), and a pinned merge.
+
+**Adaptive salt fan-out for hot tiles**: each tile's salt count derives
+from its own feature count (``n_salt="auto"``, the default — a cheap
+pre-aggregate joined back), so dense urban tiles split into bounded
+sub-groups, each encoded as an independent FeatureTable block and merged by
+byte concatenation — valid because MLT tiles are defined as concatenations
+of independently-decodable framed blocks (specification.md:38,92-99). AQE
+splits only join/aggregate shuffles, never one oversized (x, y) group of
+the encode exchange, so the salt is load-bearing at scale (SURVEY.md §7.3).
 
 Feature ids follow the reference's sort-and-regenerate strategy
 (MltConverter.java:548-611): features sorted by Hilbert index of their first
@@ -22,7 +27,7 @@ vertex, ids reassigned 0..n-1 in final order.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -54,14 +59,7 @@ def _features_to_geometry_column(
     all_coords = np.vstack([p[1] for p in parsed])
     counts = np.array([p[1].shape[0] for p in parsed], dtype=np.int64)
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    aqx, aqy = TM.np_quantize_to_extent(
-        all_coords[:, 0],
-        all_coords[:, 1],
-        np.full(all_coords.shape[0], tile_x),
-        np.full(all_coords.shape[0], tile_y),
-        zoom,
-        extent,
-    )
+    aqx, aqy = TM.np_quantize_to_extent(all_coords[:, 0], all_coords[:, 1], tile_x, tile_y, zoom, extent)
     # sort by hilbert index of the quantized first vertex (reference sort)
     order = np.argsort(K.hilbert_encode(aqx[starts], aqy[starts], order=12), kind="stable")
 
@@ -135,9 +133,7 @@ def _points_to_geometry_column(
         toks = w[w.find("(") + 1 : w.rfind(")")].split()
         lon[i] = float(toks[0])
         lat[i] = float(toks[1])
-    qx, qy = TM.np_quantize_to_extent(
-        lon, lat, np.full(lon.shape[0], tile_x), np.full(lon.shape[0], tile_y), zoom, extent
-    )
+    qx, qy = TM.np_quantize_to_extent(lon, lat, tile_x, tile_y, zoom, extent)
     order = np.argsort(K.hilbert_encode(qx, qy, order=12), kind="stable")
     verts = np.empty(lon.shape[0] * 2, dtype=np.int64)
     verts[0::2] = qx[order]
@@ -223,7 +219,92 @@ def _iter_sorted_groups(
         yield pend_key, flush()
 
 
-_ENCODE_FLUSH_ROWS = 256  # bound output-side buffering in the encode kernels
+_ENCODE_FLUSH_ROWS = 256  # bound output-side buffering in the encode kernel
+
+
+def _assemble_tiles(
+    tiled: DataFrame,
+    zoom: int,
+    n_salt: int | str,
+    salt_target: int,
+    in_group_order: tuple[str, ...],
+    build_group: Callable[[int, int, pd.DataFrame], tuple | None],
+) -> DataFrame:
+    """The one tile write path: ``tiled`` rows (x, y, doc_id, span_offset,
+    …) → one row per tile (z, x, y, n_features, n_vertices, byte_size,
+    tile). Salts hot tiles, sorts each (x, y, salt) group by
+    ``in_group_order``, encodes it with ``build_group`` — one TILE_SCHEMA
+    row, or None when no feature survives — and joins a tile's parts by
+    byte concatenation."""
+    tiled = _with_salt(tiled, n_salt, salt_target)
+    # fine-grained explicit partitioning for the encode exchange: tile sizes
+    # are Zipf-ish, so hashing groups into only `shuffle.partitions` buckets
+    # leaves 2× shuffle-read skew between tasks and the slowest task sets
+    # the stage wall (measured: 5.1-10.1 s task spread at 8 buckets). An
+    # explicit 4×parallelism repartition on the group keys satisfies the
+    # groupBy distribution (no extra exchange) and AQE leaves explicit-N
+    # repartitions alone, so the skew averages out across many small tasks.
+    fan = tiled.sparkSession.sparkContext.defaultParallelism * 4
+    # sortWithinPartitions makes each (x, y, salt) group contiguous so the
+    # kernel can stream one group at a time (memory = group, not partition).
+    # The full in-group order is part of the SAME JVM-side spill-aware sort
+    # — a per-group pandas sort_values was 2.1 s of the 5.6 s single-core
+    # kernel at sf0.1 (categorical/lexsort overhead per group), vs ~free as
+    # extra sort keys in the ExternalSorter
+    tiled = tiled.repartition(fan, "x", "y", "salt").sortWithinPartitions(
+        "x", "y", "salt", *in_group_order
+    )
+
+    def encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # whole-partition kernel, streamed group-at-a-time: Spark's
+        # per-group applyInPandas pays Arrow serialization + UDF dispatch
+        # per group, which dominates when tiles are small (measured 2× on a
+        # 10k-tile corpus); the sorted exchange above delivers each
+        # (x, y, salt) group contiguously so peak memory is one group
+        cols = ["x", "y", "n_features", "n_vertices", "part"]
+        rows = []
+        for (x, y, _salt), grp in _iter_sorted_groups(batches):
+            r = build_group(x, y, grp)
+            if r is not None:
+                rows.append(r)
+            if len(rows) >= _ENCODE_FLUSH_ROWS:
+                yield pd.DataFrame(rows, columns=cols)
+                rows = []
+        if rows:
+            yield pd.DataFrame(rows, columns=cols)
+
+    parts = tiled.mapInPandas(encode_partition, schema=TILE_SCHEMA)
+
+    # pin the merge exchange to an explicit same-key repartition: the groupBy
+    # needs this exchange anyway (no extra shuffle), but without the pin AQE
+    # coalesces the small post-shuffle output to ONE partition — and every
+    # downstream Python kernel (transcode, membership decode) then funnels
+    # the whole tile table through a single Arrow task (measured: 1 task /
+    # 1024 tiles; transcode 3.6 s → 2.5 s with the pin). Parallelism-derived,
+    # not a constant, so it stays scale-adaptive.
+    merge_fan = tiled.sparkSession.sparkContext.defaultParallelism
+    return (
+        parts.repartition(merge_fan, "x", "y")
+        .groupBy("x", "y")
+        .agg(
+            F.sum("n_features").alias("n_features"),
+            F.sum("n_vertices").alias("n_vertices"),
+            F.aggregate(
+                F.array_sort(F.collect_list(F.col("part"))),
+                F.lit(b""),
+                lambda acc, p: F.concat(acc, p),
+            ).alias("tile"),
+        )
+        .select(
+            F.lit(zoom).alias("z"),
+            "x",
+            "y",
+            "n_features",
+            "n_vertices",
+            F.length("tile").cast("long").alias("byte_size"),
+            "tile",
+        )
+    )
 
 
 def encode_tiles(
@@ -245,31 +326,13 @@ def encode_tiles(
     ``n_salt="auto"`` (default) fans hot tiles out by their own feature
     count — see ``_with_salt``.
     """
-
-    cols = ["doc_id", "span_offset", "wkt"]
     tiled = features.select(
-        *cols,
+        "doc_id",
+        "span_offset",
+        "wkt",
         (F.col(layer_col) if layer_col else F.lit(layer_name)).alias("_layer"),
         TM.lon_to_tile_x(F.col("rep_lon"), zoom).alias("x"),
         TM.lat_to_tile_y(F.col("rep_lat"), zoom).alias("y"),
-    )
-    tiled = _with_salt(tiled, n_salt, salt_target)
-    # fine-grained explicit partitioning for the encode exchange: tile sizes
-    # are Zipf-ish, so hashing groups into only `shuffle.partitions` buckets
-    # leaves 2× shuffle-read skew between tasks and the slowest task sets
-    # the stage wall (measured: 5.1-10.1 s task spread at 8 buckets). An
-    # explicit 4×parallelism repartition on the group keys satisfies the
-    # groupBy distribution (no extra exchange) and AQE leaves explicit-N
-    # repartitions alone, so the skew averages out across many small tasks.
-    fan = tiled.sparkSession.sparkContext.defaultParallelism * 4
-    # sortWithinPartitions makes each (x, y, salt) group contiguous so the
-    # kernel can stream one group at a time (memory = group, not partition).
-    # The full in-group order (_layer, doc_id, span_offset) is part of the
-    # SAME JVM-side spill-aware sort — a per-group pandas sort_values was
-    # 2.1 s of the 5.6 s single-core kernel at sf0.1 (categorical/lexsort
-    # overhead per group), vs ~free as extra sort keys in the ExternalSorter
-    tiled = tiled.repartition(fan, "x", "y", "salt").sortWithinPartitions(
-        "x", "y", "salt", "_layer", "doc_id", "span_offset"
     )
 
     def encode_group(x: int, y: int, pdf: pd.DataFrame) -> tuple:
@@ -308,55 +371,9 @@ def encode_tiles(
             n_vertices += g.vertices.shape[0] // 2
         return (x, y, len(pdf), n_vertices, part)
 
-    def encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # whole-partition kernel, streamed group-at-a-time: Spark's
-        # per-group applyInPandas pays Arrow serialization + UDF dispatch
-        # per group, which dominates when tiles are small (measured 2× on a
-        # 10k-tile corpus); the sorted exchange above delivers each
-        # (x, y, salt) group contiguously so peak memory is one group
-        cols = ["x", "y", "n_features", "n_vertices", "part"]
-        rows = []
-        for (x, y, _salt), grp in _iter_sorted_groups(batches):
-            rows.append(encode_group(x, y, grp))
-            if len(rows) >= _ENCODE_FLUSH_ROWS:
-                yield pd.DataFrame(rows, columns=cols)
-                rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-    parts = tiled.mapInPandas(encode_partition, schema=TILE_SCHEMA)
-
-    # pin the merge exchange to an explicit same-key repartition: the groupBy
-    # needs this exchange anyway (no extra shuffle), but without the pin AQE
-    # coalesces the small post-shuffle output to ONE partition — and every
-    # downstream Python kernel (transcode, membership decode) then funnels
-    # the whole tile table through a single Arrow task (measured: 1 task /
-    # 1024 tiles; transcode 3.6 s → 2.5 s with the pin). Parallelism-derived,
-    # not a constant, so it stays scale-adaptive.
-    merge_fan = tiled.sparkSession.sparkContext.defaultParallelism
-    merged = (
-        parts.repartition(merge_fan, "x", "y")
-        .groupBy("x", "y")
-        .agg(
-            F.sum("n_features").alias("n_features"),
-            F.sum("n_vertices").alias("n_vertices"),
-            F.aggregate(
-                F.array_sort(F.collect_list(F.col("part"))),
-                F.lit(b""),
-                lambda acc, p: F.concat(acc, p),
-            ).alias("tile"),
-        )
-        .select(
-            F.lit(zoom).alias("z"),
-            "x",
-            "y",
-            "n_features",
-            "n_vertices",
-            F.length("tile").cast("long").alias("byte_size"),
-            "tile",
-        )
+    return _assemble_tiles(
+        tiled, zoom, n_salt, salt_target, ("_layer", "doc_id", "span_offset"), encode_group
     )
-    return merged
 
 
 def encode_tiles_clipped(
@@ -396,13 +413,6 @@ def encode_tiles_clipped(
             F.explode(F.sequence(F.col("_y0"), F.col("_y1"))).alias("y"),
         )
     )
-    tiled = _with_salt(tiled, n_salt, salt_target)
-    # fine-grained sorted exchange, same reasoning as encode_tiles — the
-    # in-group (doc_id, span_offset) order rides the same JVM sort
-    fan = tiled.sparkSession.sparkContext.defaultParallelism * 4
-    tiled = tiled.repartition(fan, "x", "y", "salt").sortWithinPartitions(
-        "x", "y", "salt", "doc_id", "span_offset"
-    )
 
     lo, hi = float(-buffer), float(extent + buffer)
 
@@ -413,15 +423,6 @@ def encode_tiles_clipped(
         parsed = [W.parse_wkt(w) for w in pdf["wkt"]]
         contains_poly = any(p[0] in (W.GT_POLYGON, W.GT_MULTIPOLYGON) for p in parsed)
 
-        nz = float(2**zoom)
-
-        def quantize(coords: np.ndarray) -> np.ndarray:
-            """Unclamped tile-local extent coords (may fall outside [0,extent))."""
-            fx = (coords[:, 0] + 180.0) / 360.0 * nz
-            rad = np.radians(coords[:, 1])
-            fy = (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / np.pi) / 2.0 * nz
-            return np.column_stack([(fx - x) * extent, (fy - y) * extent])
-
         def push(pts: np.ndarray) -> None:
             chunk = np.empty(pts.shape[0] * 2, dtype=np.int64)
             chunk[0::2] = np.floor(pts[:, 0]).astype(np.int64)
@@ -429,7 +430,7 @@ def encode_tiles_clipped(
             vert_chunks.append(chunk)
 
         for gt, coords, structure in parsed:
-            q = quantize(coords)
+            q = np.column_stack(TM.np_extent_coords(coords[:, 0], coords[:, 1], x, y, zoom, extent))
             if gt in (W.GT_POINT, W.GT_MULTIPOINT):
                 keep = q[(q[:, 0] >= lo) & (q[:, 0] <= hi) & (q[:, 1] >= lo) & (q[:, 1] <= hi)]
                 if keep.shape[0] == 0:
@@ -505,47 +506,7 @@ def encode_tiles_clipped(
         )
         return (x, y, n_feat, g.vertices.shape[0] // 2, part)
 
-    def encode_partition(batches):
-        # streamed per-partition grouping (see encode_tiles: per-group
-        # applyInPandas dispatch dominates on small tiles; the sorted
-        # exchange delivers each group contiguously → group-sized memory)
-        cols = ["x", "y", "n_features", "n_vertices", "part"]
-        rows = []
-        for (x, y, _salt), grp in _iter_sorted_groups(batches):
-            r = encode_group(x, y, grp)
-            if r is not None:
-                rows.append(r)
-            if len(rows) >= _ENCODE_FLUSH_ROWS:
-                yield pd.DataFrame(rows, columns=cols)
-                rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-    parts = tiled.mapInPandas(encode_partition, schema=TILE_SCHEMA)
-    # pinned merge exchange — see encode_tiles (decode-kernel parallelism)
-    merge_fan = tiled.sparkSession.sparkContext.defaultParallelism
-    return (
-        parts.repartition(merge_fan, "x", "y")
-        .groupBy("x", "y")
-        .agg(
-            F.sum("n_features").alias("n_features"),
-            F.sum("n_vertices").alias("n_vertices"),
-            F.aggregate(
-                F.array_sort(F.collect_list(F.col("part"))),
-                F.lit(b""),
-                lambda acc, p: F.concat(acc, p),
-            ).alias("tile"),
-        )
-        .select(
-            F.lit(zoom).alias("z"),
-            "x",
-            "y",
-            "n_features",
-            "n_vertices",
-            F.length("tile").cast("long").alias("byte_size"),
-            "tile",
-        )
-    )
+    return _assemble_tiles(tiled, zoom, n_salt, salt_target, ("doc_id", "span_offset"), encode_group)
 
 
 def build_parent_tiles(tiles: DataFrame, extent: int = 4096) -> DataFrame:

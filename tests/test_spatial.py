@@ -219,18 +219,31 @@ class TestCompactCover:
         S.pip_join(points, polys, broadcast_polys=False)  # hinted → no probe
         assert n_jobs() - before == 0
 
-    def test_pip_results_identical_with_compaction(self, spark, points, polys):
-        a = {(r.pid, r.poly_id) for r in S.pip_join(points, polys).collect()}
-        # monkey-less comparison: run cover without compaction via param
-        from maplibre_tile_spec_spark.operators.spatial import polygon_cover
-        import maplibre_tile_spec_spark.operators.spatial as sp_mod
-
-        orig = sp_mod.polygon_cover
-        sp_mod.polygon_cover = lambda p, levels=(4, 6, 8, 10, 12), max_cells=64, compact=True: orig(
-            p, levels=levels, max_cells=max_cells, compact=False
+    def test_pip_results_identical_with_compaction(self, spark, points, polys, monkeypatch):
+        # at 64 cells no sibling block of this fixture is complete, so the
+        # cover is finer here: compaction must change it (720 → 615 cells),
+        # or the check below would compare compacted with compacted output
+        monkeypatch.setattr(S, "PIP_COVER_MAX_CELLS", 256)
+        assert (
+            S.polygon_cover(polys, max_cells=256, compact=False).count()
+            > S.polygon_cover(polys, max_cells=256).count()
         )
-        try:
-            b = {(r.pid, r.poly_id) for r in S.pip_join(points, polys).collect()}
-        finally:
-            sp_mod.polygon_cover = orig
-        assert a == b
+        cover_rows, cover = S._cover_rows, S.polygon_cover
+        for broadcast in (True, False):
+
+            def run():
+                return {(r.pid, r.poly_id) for r in S.pip_join(points, polys, broadcast_polys=broadcast).collect()}
+
+            compacted = run()
+            flags = []
+            with monkeypatch.context() as m:
+                m.setattr(S, "PIP_COVER_COMPACT", False)
+                # spy on the driver-side call of each branch: the broadcast
+                # branch covers on the driver, the co-located branch calls
+                # polygon_cover
+                if broadcast:
+                    m.setattr(S, "_cover_rows", lambda *a: flags.append(a[-1]) or cover_rows(*a))
+                else:
+                    m.setattr(S, "polygon_cover", lambda p, **kw: flags.append(kw["compact"]) or cover(p, **kw))
+                assert run() == compacted, f"broadcast_polys={broadcast}"
+            assert flags and not any(flags), f"broadcast_polys={broadcast}: patched default not used"

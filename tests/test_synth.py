@@ -187,6 +187,24 @@ class TestFeatureBatchGuards:
         with _pytest.raises(Exception):
             _parse_batch(pdf)
 
+    def test_offsetting_token_errors_in_two_rows_raise(self):
+        """One row with an extra token and one with a missing token leave
+        the batch total right; the per-row check must still send both to
+        the structural parser instead of shifting row 1's coordinates."""
+        import pandas as pd
+
+        from maplibre_tile_spec_spark.operators.features import _parse_batch
+
+        pdf = pd.DataFrame(
+            {
+                "doc_id": ["a", "b", "c"],
+                "span_offset": [0, 0, 0],
+                "wkt": ["LINESTRING (1 2, 3 4 9)", "LINESTRING (5 6, 7)", "LINESTRING (10 20, 30 40)"],
+            }
+        )
+        with pytest.raises(ValueError):
+            _parse_batch(pdf)
+
     def test_even_mixed_batch_unaffected(self):
         import pandas as pd
 

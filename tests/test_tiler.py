@@ -157,6 +157,20 @@ class TestEncodeTiles:
         assert total_tile_bytes < total_wkt_bytes * 0.5
 
 
+class TestMalformedWkt:
+    @pytest.mark.parametrize("wkt", ["POINT EMPTY", "LINESTRING (east north, 1 2)"])
+    def test_rep_point_path_fails_loudly(self, spark, wkt):
+        """A WKT without a leading numeric pair has no rep point: the ANSI
+        cast of the empty regexp match fails the tile job instead of tiling
+        a NULL rep point into a clamped corner tile."""
+        docs = spark.createDataFrame(
+            [("bad", [("geom", wkt, None, 0)]), ("good", [("geom", "POINT (1 2)", None, 0)])],
+            synth.DOCUMENTS_SCHEMA,
+        )
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            tiler.encode_tiles(FE.extract_rep_points(docs), zoom=4).collect()
+
+
 class TestMultiLayer:
     def test_thematic_layers(self, spark, feats):
         _, features = feats
