@@ -35,7 +35,9 @@ def _themed(features):
 
 #: tiler calls whose output bytes are pinned in tests/data/tiler_anchors.json:
 #: plain, hot-tile fan-out, layer blocks, doc refs, and the clipped tiler
-#: with and without buffer and with salted parts
+#: with and without buffer and with salted parts. Anchors come from the
+#: tiler before any refactor; a deliberate format change copies the new
+#: digest from the failure message into the JSON
 ANCHOR_CALLS = {
     "encode_tiles(zoom=8)": lambda f: tiler.encode_tiles(f, zoom=8),
     "encode_tiles(zoom=0, salt_target=n//8)": lambda f: tiler.encode_tiles(
