@@ -334,24 +334,20 @@ def encode_int_stream(
     values: np.ndarray,
     signed: bool,
     bits: int = 32,
-    option: str = "auto",
     plt: int = 2,
     long_auto_rle: bool = False,
 ) -> IntStreamEncoding:
     """Integer stream encoding at the given physical level (PLT_VARINT
     default; PLT_FASTPFOR for 32-bit streams on the advanced path).
 
-    ``option`` mirrors the reference's IntegerEncodingOption
-    (ConversionConfig): 'auto' (cost-based argmin with gating, const-stream
-    forcing, first-min tie-break — IntegerEncoder.java:221-365), or forced
-    'plain' / 'delta' / 'rle' / 'delta_rle'.
+    The logical level is the reference's AUTO selection (cost-based argmin
+    over plain / delta / RLE / delta-RLE with gating, const-stream forcing
+    and a first-min tie-break — IntegerEncoder.java:221-365).
     """
     v = values.astype(np.int64)
     n = v.shape[0]
     deltas = delta_encode(v, bits=bits)
     phys = _physical_encoder(plt, bits)
-    if option != "auto":
-        return _encode_int_forced(v, deltas, signed, bits, option, phys)
 
     def as_unsigned(a: np.ndarray, do_zigzag: bool) -> np.ndarray:
         if do_zigzag:
@@ -406,33 +402,6 @@ def encode_int_stream(
     if idx == 2:
         return IntStreamEncoding(candidates[2], LLT_RLE, LLT_NONE, rle_meta[0], runs_v, n)
     return IntStreamEncoding(candidates[3], LLT_DELTA, LLT_RLE, drle_meta[0], runs_d, n)
-
-
-def _encode_int_forced(
-    v: np.ndarray, deltas: np.ndarray, signed: bool, bits: int, option: str, phys=varint_encode
-) -> IntStreamEncoding:
-    def as_unsigned(a: np.ndarray, do_zigzag: bool) -> np.ndarray:
-        if do_zigzag:
-            return zigzag_encode(a, bits=bits).astype(np.uint64)
-        if bits == 32:
-            return a.astype(np.int64).astype(np.uint32).astype(np.uint64)
-        return a.astype(np.int64).view(np.uint64)
-
-    if option == "plain":
-        return IntStreamEncoding(phys(as_unsigned(v, signed)), LLT_NONE, LLT_NONE, v.shape[0], 0, 0)
-    if option == "delta":
-        return IntStreamEncoding(phys(as_unsigned(deltas, True)), LLT_DELTA, LLT_NONE, v.shape[0], 0, 0)
-    if option == "rle":
-        r, vals = rle_encode(v)
-        payload = phys(np.concatenate([r.astype(np.uint64), as_unsigned(vals, signed)]))
-        return IntStreamEncoding(payload, LLT_RLE, LLT_NONE, r.shape[0] + vals.shape[0], r.shape[0], v.shape[0])
-    if option == "delta_rle":
-        r, dvals = rle_encode(deltas)
-        payload = phys(
-            np.concatenate([r.astype(np.uint64), zigzag_encode(dvals, bits=bits).astype(np.uint64)])
-        )
-        return IntStreamEncoding(payload, LLT_DELTA, LLT_RLE, r.shape[0] + dvals.shape[0], r.shape[0], v.shape[0])
-    raise ValueError(f"unknown encoding option {option!r}")
 
 
 def decode_int_stream(

@@ -26,6 +26,7 @@ FSST dictionaries decode via a from-scratch FSST symbol-table expander.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -834,77 +835,29 @@ class DecodedLayer:
     prop_types: dict[str, str] = field(default_factory=dict)
 
 
-def decode_tile(
-    buf: bytes,
-    layers: set[str] | None = None,
-    columns: set[str] | None = None,
-) -> list[DecodedLayer]:
-    """Decode a tile; ``layers``/``columns`` enable decode-side projection
-    pushdown (rust/mlt/src/decoder/decode.rs:19-64 analog): unselected
-    layers are skipped by advancing over their framed bytes without
-    parsing, unselected property columns advance by stream byte-length
-    without decoding payloads."""
-    out = []
-    pos = 0
-    n = len(buf)
+def _iter_frames(buf: bytes) -> Iterator[tuple[int, int, int, int]]:
+    """Framed blocks of a tile → ``(frame_start, tag, body_pos, frame_end)``.
+    ``frame_start`` is BEFORE the length varint (it can span >1 byte); the
+    length counts the tag varint and the body."""
+    pos, n = 0, len(buf)
     while pos < n:
+        frame_start = pos
         v, pos = K.varint_decode(buf, 1, pos)
-        length = int(v[0])
-        start = pos
+        frame_end = pos + int(v[0])
         v, pos = K.varint_decode(buf, 1, pos)
-        tag = int(v[0])
-        body_end = start + length
-        if tag in (TAG_EMBEDDED, TAG_EXTENDED):
-            if layers is not None:
-                name, _ = _get_string(buf, pos)
-                if name not in layers:
-                    pos = body_end
-                    continue
-            out.append(_decode_layer(buf, pos, body_end, columns=columns))
-        pos = body_end
-    return out
+        yield frame_start, int(v[0]), pos, frame_end
+        pos = frame_end
 
 
-def reencode_tile(buf: bytes, use_fsst: bool = True, fixture_rules: bool = True) -> bytes:
-    """Decode a tile to the value model and re-encode it column-by-column in
-    the ORIGINAL column order, re-running every encoder candidate selection
-    from the data alone. When our selection rules and stream encoders match
-    the reference exactly, the output equals the input byte-for-byte — the
-    strongest whole-tile parity check the fixtures allow without the MVT
-    conversion pipeline (column mapping, type coercion). ``fixture_rules``
-    selects the fixture generator's geometry rules (pre-tessellation path,
-    morton disabled); pass False for tiles produced by our own tiler
-    (standard selection with morton enabled)."""
-    out = b""
-    pos = 0
-    n = len(buf)
-    while pos < n:
-        frame_start = pos  # BEFORE the length varint — it can span >1 byte
-        v, pos = K.varint_decode(buf, 1, pos)
-        length = int(v[0])
-        start = pos
-        v, pos = K.varint_decode(buf, 1, pos)
-        tag = int(v[0])
-        body_end = start + length
-        if tag not in (TAG_EMBEDDED, TAG_EXTENDED):
-            # unknown frame: copy verbatim INCLUDING the full length varint
-            out += bytes(buf[frame_start:body_end])
-            pos = body_end
-            continue
-        out += _reencode_layer(
-            buf, pos, body_end, use_fsst=use_fsst, fixture_rules=fixture_rules, tag=tag
-        )
-        pos = body_end
-    return out
-
-
-def _reencode_layer(
-    buf: bytes, pos: int, end: int, use_fsst: bool, fixture_rules: bool = True, tag: int = TAG_EMBEDDED
-) -> bytes:
+def _read_layer_header(buf: bytes, pos: int) -> tuple[str, int, list, int]:
+    """Layer name, extent and one ``(type code, name, children)`` per column
+    → (name, extent, columns, position of the first column's streams).
+    STRUCT children are ``(code, suffix)`` pairs; LIST/VEC carry their
+    element type code as the one child ``(code, None)``."""
     name, pos = _get_string(buf, pos)
     v, pos = K.varint_decode(buf, 2, pos)
     extent, n_cols = int(v[0]), int(v[1])
-    col_meta = []
+    cols = []
     for _ in range(n_cols):
         v, pos = K.varint_decode(buf, 1, pos)
         tc = int(v[0])
@@ -924,9 +877,58 @@ def _reencode_layer(
         elif tc & ~1 in (TC_LIST, TC_VEC2, TC_VEC3):
             ev, pos = K.varint_decode(buf, 1, pos)  # element type code
             children.append((int(ev[0]), None))
-        col_meta.append((tc, cname, children))
+        cols.append((tc, cname, children))
+    return name, extent, cols, pos
 
-    meta = _put_string(name) + _varint1(extent) + _varint1(n_cols)
+
+def decode_tile(
+    buf: bytes,
+    layers: set[str] | None = None,
+    columns: set[str] | None = None,
+) -> list[DecodedLayer]:
+    """Decode a tile; ``layers``/``columns`` enable decode-side projection
+    pushdown (rust/mlt/src/decoder/decode.rs:19-64 analog): unselected
+    layers are skipped by advancing over their framed bytes without
+    parsing, unselected property columns advance by stream byte-length
+    without decoding payloads."""
+    out = []
+    for _start, tag, pos, end in _iter_frames(buf):
+        if tag not in (TAG_EMBEDDED, TAG_EXTENDED):
+            continue
+        if layers is not None and _get_string(buf, pos)[0] not in layers:
+            continue
+        out.append(_decode_layer(buf, pos, end, columns=columns))
+    return out
+
+
+def reencode_tile(buf: bytes, use_fsst: bool = True, fixture_rules: bool = True) -> bytes:
+    """Decode a tile to the value model and re-encode it column-by-column in
+    the ORIGINAL column order, re-running every encoder candidate selection
+    from the data alone. When our selection rules and stream encoders match
+    the reference exactly, the output equals the input byte-for-byte — the
+    strongest whole-tile parity check the fixtures allow without the MVT
+    conversion pipeline (column mapping, type coercion). ``fixture_rules``
+    selects the fixture generator's geometry rules (pre-tessellation path,
+    morton disabled); pass False for tiles produced by our own tiler
+    (standard selection with morton enabled)."""
+    out = b""
+    for frame_start, tag, pos, end in _iter_frames(buf):
+        if tag not in (TAG_EMBEDDED, TAG_EXTENDED):
+            # unknown frame: copy verbatim INCLUDING the full length varint
+            out += bytes(buf[frame_start:end])
+            continue
+        out += _reencode_layer(
+            buf, pos, end, use_fsst=use_fsst, fixture_rules=fixture_rules, tag=tag
+        )
+    return out
+
+
+def _reencode_layer(
+    buf: bytes, pos: int, end: int, use_fsst: bool, fixture_rules: bool = True, tag: int = TAG_EMBEDDED
+) -> bytes:
+    name, extent, col_meta, pos = _read_layer_header(buf, pos)
+
+    meta = _put_string(name) + _varint1(extent) + _varint1(len(col_meta))
     body = b""
     for tc, cname, children in col_meta:
         if tc in (TC_ID_U32, TC_ID_U32_NULL, TC_ID_U64, TC_ID_U64_NULL):
@@ -1028,30 +1030,7 @@ def _skip_scalar_column(buf: bytes, pos: int, scalar: str, nullable: bool) -> in
 
 
 def _decode_layer(buf: bytes, pos: int, end: int, columns: set[str] | None = None) -> DecodedLayer:
-    name, pos = _get_string(buf, pos)
-    v, pos = K.varint_decode(buf, 2, pos)
-    extent, n_cols = int(v[0]), int(v[1])
-    col_meta = []
-    for _ in range(n_cols):
-        v, pos = K.varint_decode(buf, 1, pos)
-        tc = int(v[0])
-        cname = None
-        children = []
-        if tc >= 10:
-            cname, pos = _get_string(buf, pos)
-        if tc == TC_STRUCT:
-            v, pos = K.varint_decode(buf, 1, pos)
-            for _ in range(int(v[0])):
-                cv, pos = K.varint_decode(buf, 1, pos)
-                ctc = int(cv[0])
-                ch_name = None
-                if ctc >= 10:
-                    ch_name, pos = _get_string(buf, pos)
-                children.append((ctc, ch_name))
-        elif tc & ~1 in (TC_LIST, TC_VEC2, TC_VEC3):
-            ev, pos = K.varint_decode(buf, 1, pos)  # element type code
-            children.append((int(ev[0]), None))
-        col_meta.append((tc, cname, children))
+    name, extent, col_meta, pos = _read_layer_header(buf, pos)
 
     ids = None
     geometry = None
@@ -1515,40 +1494,22 @@ def inspect_tile(buf: bytes) -> list[dict]:
     """Walk a tile without materializing values → one record per stream:
     layer, column, stream kind, logical technique, value count, byte size.
     Feeds the same size-analysis workflows as the reference's stream
-    observer, but as plain dicts (→ DataFrame rows at scale)."""
+    observer, but as plain dicts (→ DataFrame rows at scale). Covers every
+    column kind ``encode_layer`` emits; raises ``ValueError`` when a layer's
+    walk does not end exactly at its frame end."""
     records = []
-    pos, n = 0, len(buf)
-    while pos < n:
-        v, pos = K.varint_decode(buf, 1, pos)
-        length = int(v[0])
-        start = pos
-        v, pos = K.varint_decode(buf, 1, pos)
-        tag = int(v[0])
-        end = start + length
+    for _start, tag, pos, end in _iter_frames(buf):
         if tag not in (TAG_EMBEDDED, TAG_EXTENDED):
-            pos = end
             continue
-        name, p = _get_string(buf, pos)
-        v, p = K.varint_decode(buf, 2, p)
-        cols = []
-        for _ in range(int(v[1])):
-            tcv, p = K.varint_decode(buf, 1, p)
-            tc = int(tcv[0])
-            cname, children = None, []
-            if tc >= 10:
-                cname, p = _get_string(buf, p)
-            if tc == TC_STRUCT:
-                cc, p = K.varint_decode(buf, 1, p)
-                for _ in range(int(cc[0])):
-                    ctc, p = K.varint_decode(buf, 1, p)
-                    ch_name = None
-                    if int(ctc[0]) >= 10:
-                        ch_name, p = _get_string(buf, p)
-                    children.append((int(ctc[0]), ch_name))
-            cols.append((tc, cname, children))
+        name, _extent, cols, p = _read_layer_header(buf, pos)
 
-        def emit(col_label: str, n_streams: int) -> None:
+        def emit(col_label: str, n_streams: int | None = None) -> None:
+            """Record and skip ``n_streams`` streams; ``None`` reads the
+            count from a leading varint (a varint-prefixed stream group)."""
             nonlocal p
+            if n_streams is None:
+                ns, p = K.varint_decode(buf, 1, p)
+                n_streams = int(ns[0])
             for _ in range(n_streams):
                 meta, p2 = K.unpack_stream_metadata(buf, p)
                 records.append(
@@ -1565,11 +1526,13 @@ def inspect_tile(buf: bytes) -> list[dict]:
                 p = p2 + meta["byte_length"]
 
         for tc, cname, children in cols:
+            kind, nullable = tc & ~1, tc & 1
             if tc in (TC_ID_U32, TC_ID_U32_NULL, TC_ID_U64, TC_ID_U64_NULL):
-                emit("id", 1 + (tc & 1))
-            elif tc == TC_GEOMETRY:
-                ns, p = K.varint_decode(buf, 1, p)
-                emit("geometry", int(ns[0]))
+                emit("id", 1 + nullable)
+            elif tc in (TC_GEOMETRY, TC_GEOMETRY_Z):
+                emit("geometry")
+                if tc == TC_GEOMETRY_Z:  # one trailing z stream, not counted
+                    emit("geometry", 1)
             elif tc == TC_STRUCT:
                 ns, p = K.varint_decode(buf, 1, p)
                 total = int(ns[0])
@@ -1580,16 +1543,24 @@ def inspect_tile(buf: bytes) -> list[dict]:
                 # so subtract it or we over-read one stream header here
                 emit(cname or "struct", total - 2 * len(children) - 1)
                 for _tc2, ch in children:
-                    cns, p = K.varint_decode(buf, 1, p)
-                    emit((cname or "") + (ch or ""), int(cns[0]))
+                    emit((cname or "") + (ch or ""))
+            elif kind == TC_LIST:  # the count covers present, length, elements
+                emit(cname)
+            elif kind == TC_MAP:  # [present] + length, then keys and values
+                emit(cname, nullable + 1)
+                emit(cname)
+                emit(cname)
+            elif kind in (TC_VEC2, TC_VEC3):  # [present] + one data stream
+                emit(cname, nullable + 1)
+            elif kind == TC_RANGE_MAP:  # [present] + length + ranges, values
+                emit(cname, nullable + 2)
+                emit(cname)
             else:
-                scalar = _CODE_TO_SCALAR[tc & ~1]
-                if scalar == "string":
-                    ns, p = K.varint_decode(buf, 1, p)
-                    emit(cname, int(ns[0]))
-                else:
-                    emit(cname, 1 + (tc & 1))
-        pos = end
+                logical = _CODE_TO_LOGICAL.get(kind)
+                scalar = _LOGICAL_PHYSICAL[logical] if logical else _CODE_TO_SCALAR[kind]
+                emit(cname, None if scalar == "string" else 1 + nullable)
+        if p != end:
+            raise ValueError(f"layer {name!r}: column walk ends at byte {p}, frame at {end}")
     return records
 
 

@@ -105,10 +105,6 @@ def _decode_value_kind(buf: memoryview):
     return None, None
 
 
-def _decode_value(buf: memoryview):
-    return _decode_value_kind(buf)[0]
-
-
 def _decode_geometry(commands: list[int]) -> tuple[list[np.ndarray], list[bool]]:
     runs: list[np.ndarray] = []
     closed: list[bool] = []

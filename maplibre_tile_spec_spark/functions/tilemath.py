@@ -42,10 +42,6 @@ def lat_to_tile_y(lat: Column, z: int) -> Column:
     return F.greatest(F.lit(0), F.least(y, F.lit(2**z - 1))).cast("int")
 
 
-def tile_xy(lon: Column, lat: Column, z: int) -> tuple[Column, Column]:
-    return lon_to_tile_x(lon, z), lat_to_tile_y(lat, z)
-
-
 def tile_to_lon(x: Column, z: int) -> Column:
     """West edge of tile column x (projection.hpp:17-30 inverse)."""
     return x.cast("double") / F.lit(float(2**z)) * F.lit(360.0) - F.lit(180.0)

@@ -158,8 +158,3 @@ def wkt_bbox(wkt: str) -> tuple[float, float, float, float]:
         float(coords[:, 0].max()),
         float(coords[:, 1].max()),
     )
-
-
-def wkt_first_vertex(wkt: str) -> tuple[float, float]:
-    _, coords, _ = parse_wkt(wkt)
-    return float(coords[0, 0]), float(coords[0, 1])

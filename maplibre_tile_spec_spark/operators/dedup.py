@@ -10,7 +10,7 @@ All hot paths are declarative Spark expressions (JVM-side, codegen'd):
   pass instead of 16 (the md5-per-member family was 59% of the whole
   headline bench), and every step is exactly reproducible in the DuckDB
   oracle (CAST('0x…' AS BIGINT) + the same 64-bit-safe affine arithmetic:
-  a·h < 2^62). A faster xxhash64 family remains for production scale.
+  a·h < 2^62). It is the only family: the oracle needs it to be exact.
 * SimHash            — 60-bit fingerprint from per-token md5-derived
   integers, majority vote per bit computed inside the row (no shuffle);
   hamming-bucket candidate join.
@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+from maplibre_tile_spec_spark.session import scoped_materialize
 
 DEFAULT_N_HASHES = 16
 DEFAULT_BAND_SIZE = 4
@@ -88,50 +90,25 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n_hashes: int = DEFAULT_N_HASHES,
     shingle_size: int = DEFAULT_SHINGLE,
-    fast: bool = False,
 ) -> DataFrame:
-    """(id, mhs array<long>) — one-md5 affine family (oracle-exact) or
-    xxhash64 family (fast path for production)."""
+    """(id, mhs array<long>) from the one-md5 affine family (oracle-exact)."""
     # small-file inputs arrive as 1-2 splits; the signature computation is
     # the expensive part, so spread it across the cluster first
     docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism * 2)
     sh, ntok = _shingles(text_col, shingle_size)
-    if fast:
+    # one md5 per shingle; members derived with exact integer arithmetic
+    p = F.lit(MERSENNE31).cast("long")
+    hashed = F.transform(
+        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % p
+    )
 
-        def xx_member(h: int):
-            return F.array_min(F.transform(F.col("_sh"), lambda s: F.xxhash64(s, F.lit(h))))
+    def affine_member(i: int):
+        a, b = F.lit(FAMILY_A[i]).cast("long"), F.lit(FAMILY_B[i])
+        return F.array_min(F.transform(F.col("_sh"), lambda v: (a * v + b) % p))
 
-        mh = F.array(*[xx_member(h) for h in range(n_hashes)])
-        base = docs.select(F.col(id_col).alias("id"), sh.alias("_sh"), ntok.alias("_n"))
-    else:
-        # one md5 per shingle; members derived with exact integer arithmetic
-        p = F.lit(MERSENNE31).cast("long")
-        hashed = F.transform(
-            sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % p
-        )
-
-        def affine_member(i: int):
-            a, b = F.lit(FAMILY_A[i]).cast("long"), F.lit(FAMILY_B[i])
-            return F.array_min(F.transform(F.col("_sh"), lambda v: (a * v + b) % p))
-
-        mh = F.array(*[affine_member(i) for i in range(n_hashes)])
-        base = docs.select(F.col(id_col).alias("id"), hashed.alias("_sh"), ntok.alias("_n"))
+    mh = F.array(*[affine_member(i) for i in range(n_hashes)])
+    base = docs.select(F.col(id_col).alias("id"), hashed.alias("_sh"), ntok.alias("_n"))
     return base.filter(F.col("_n") >= shingle_size).select("id", mh.alias("mhs"))
-
-
-def _scoped_materialize(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
-    """Materialize ``result`` once (its single action is served by the
-    persisted ``intermediates``), then release the intermediates before
-    returning. The returned DataFrame stays persisted — bounded by OUTPUT
-    size, with lineage intact, so evicted/lost blocks recompute from source
-    — and nothing input-sized is pinned across the caller's session (the
-    r2 storage-leak finding). Callers may ``unpersist()`` the result when
-    done; the bench clears the cache between queries."""
-    out = result.persist()
-    out.count()
-    for df in intermediates:
-        df.unpersist()
-    return out
 
 
 def band_sig_expr(n_bands: int, band_size: int):
@@ -175,7 +152,6 @@ def lsh_candidate_pairs(
     n_hashes: int = DEFAULT_N_HASHES,
     band_size: int = DEFAULT_BAND_SIZE,
     shingle_size: int = DEFAULT_SHINGLE,
-    fast: bool = False,
 ) -> DataFrame:
     """Near-duplicate candidate pairs (doc_a < doc_b) sharing ≥1 LSH band."""
     n_bands = n_hashes // band_size
@@ -183,10 +159,10 @@ def lsh_candidate_pairs(
     # lambda bodies, so without a materialization boundary the full
     # n_hashes×shingles md5 computation inlines into every band AND both
     # self-join sides (~32× recompute observed at bench scale)
-    sigs = minhash_signatures(docs, text_col, id_col, n_hashes, shingle_size, fast).persist()
+    sigs = minhash_signatures(docs, text_col, id_col, n_hashes, shingle_size).persist()
     bdf = sigs.select("id", F.posexplode(band_sig_expr(n_bands, band_size)).alias("band", "sig"))
     pairs = pairs_from_bands(bdf)
-    return _scoped_materialize(pairs, sigs)
+    return scoped_materialize(pairs, sigs)
 
 
 def _ngram_jaccard_build(
@@ -228,7 +204,7 @@ def _ngram_jaccard_build(
     # and Catalyst re-derives the whole df-aggregate + join + window subtree
     # per side without a materialization boundary (measured ~0.9 s of the
     # 3.4 s cell at sf0.1). Prefix-sized (smaller than the exploded shingle
-    # table); released by the caller's _scoped_materialize.
+    # table); released by the caller's scoped_materialize.
     prefixes = (
         base.join(dfreq, "sh")
         .withColumn("rn", F.row_number().over(w_id))
@@ -315,9 +291,9 @@ def ngram_jaccard_pairs(
     Document frequency comes from a partial-aggregated groupBy + join back
     (never a Window over the shingle key — see the inline comment), and the
     returned DataFrame is eagerly materialized with the input-sized
-    intermediates released (``_scoped_materialize``)."""
+    intermediates released (``scoped_materialize``)."""
     out, sets, prefixes, _cand = _ngram_jaccard_build(docs, text_col, id_col, shingle_size, threshold)
-    return _scoped_materialize(out, sets, prefixes)
+    return scoped_materialize(out, sets, prefixes)
 
 
 def connected_components(
@@ -462,7 +438,7 @@ def dedup_keep_canonical(
     assign = cluster_assign(docs, pairs, id_col, max_iter).persist()
     sizes = assign.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
     out = assign.filter(F.col(id_col) == F.col("cluster_id")).join(sizes, "cluster_id")
-    return _scoped_materialize(out, assign)
+    return scoped_materialize(out, assign)
 
 
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 60) -> DataFrame:
@@ -528,4 +504,4 @@ def simhash_near_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    return _scoped_materialize(pairs, sh)
+    return scoped_materialize(pairs, sh)

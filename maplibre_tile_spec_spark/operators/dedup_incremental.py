@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from maplibre_tile_spec_spark.operators import dedup
+from maplibre_tile_spec_spark.session import scoped_materialize
 
 
 def ensure_store_table(spark, suffix: str, location: str = "/tmp/mlt_band_stores") -> str:
@@ -98,14 +99,13 @@ def minhash_band_table(
     n_hashes: int = dedup.DEFAULT_N_HASHES,
     band_size: int = dedup.DEFAULT_BAND_SIZE,
     shingle_size: int = dedup.DEFAULT_SHINGLE,
-    fast: bool = False,
 ) -> DataFrame:
     """Exploded LSH band table ``(id long, band int, sig string)`` — the
     band-store row shape. Same signature family and band hashing as
     :func:`dedup.lsh_candidate_pairs`, so stored rows are bit-comparable
     with freshly computed ones."""
     n_bands = n_hashes // band_size
-    sigs = dedup.minhash_signatures(docs, text_col, id_col, n_hashes, shingle_size, fast)
+    sigs = dedup.minhash_signatures(docs, text_col, id_col, n_hashes, shingle_size)
     return sigs.select(
         F.col("id").cast("long").alias("id"),
         F.posexplode(dedup.band_sig_expr(n_bands, band_size)).alias("band", "sig"),
@@ -187,7 +187,6 @@ def lsh_dedup_incremental(
     n_hashes: int = dedup.DEFAULT_N_HASHES,
     band_size: int = dedup.DEFAULT_BAND_SIZE,
     shingle_size: int = dedup.DEFAULT_SHINGLE,
-    fast: bool = False,
     max_iter: int = 30,
 ) -> IncrementalDedup:
     """Deduplicate a new batch against the standing corpus WITHOUT touching
@@ -200,7 +199,7 @@ def lsh_dedup_incremental(
     connected components, remap — is sized by the batch and the clusters
     it touches, never by the corpus."""
     new_bands = minhash_band_table(
-        new_docs, text_col, id_col, n_hashes, band_size, shingle_size, fast
+        new_docs, text_col, id_col, n_hashes, band_size, shingle_size
     ).persist()
     store = band_store.select("band", "sig", F.col("id").alias("old_id"))
     # (new doc, old doc) candidates sharing >= 1 band — the store side keeps
@@ -240,11 +239,8 @@ def lsh_dedup_incremental(
     # materialize through the persisted probe edges, then release them;
     # comp is a driver-built or checkpointed frame, so nothing re-reads the
     # edges afterwards
-    new_assign = new_assign.persist()
-    remap = remap.persist()
-    new_assign.count()
-    remap.count()
-    no_edges.unpersist()
+    new_assign = scoped_materialize(new_assign)
+    remap = scoped_materialize(remap, no_edges)
     return IncrementalDedup(new_assign=new_assign, remap=remap, new_bands=new_bands)
 
 

@@ -3,12 +3,14 @@
 * ``cosine_topk_bruteforce`` — exact top-k via broadcast cross join; the
   dot/norm folds are Catalyst ``aggregate``/``zip_with`` expressions (no
   Python). Baseline + oracle-checkable.
-* ``random_hyperplane_signatures`` / ``ann_lsh_topk`` — the scale path:
-  sign-of-projection LSH signatures from a seeded, hash-derived plane
-  matrix (deterministic, partition-independent) computed in one Arrow-
-  batched pandas UDF; candidates bucket-join on signature prefix bands,
-  exact re-rank on the (small) candidate set. At 10^12 rows the signature
-  is the shuffle key; brute force stays O(n·q).
+* ``ann_lsh_topk_catalyst`` — the scale path: sign-of-projection LSH
+  signatures against seeded, hash-derived ±1 planes (deterministic,
+  partition-independent) over integer-quantized embeddings, computed in
+  one Arrow-batched integer matmul (``rademacher_signatures_arrow``) that
+  is bit-identical to the Catalyst/SQL twin ``rademacher_signature``;
+  candidates bucket-join on signature bands, exact re-rank on the (small)
+  candidate set. At 10^12 rows the signature is the shuffle key; brute
+  force stays O(n·q).
 """
 
 from __future__ import annotations
@@ -65,29 +67,6 @@ def _plane_matrix(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return (u.reshape(n_planes, dim) - 0.5) * 2.0
 
 
-def random_hyperplane_signatures(
-    df: DataFrame, n_planes: int = 16, seed: int = 7, id_col: str = "vec_id"
-) -> DataFrame:
-    """(id, sig long) — sign bits of projections onto seeded hyperplanes."""
-
-    def sign_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emb = np.stack(pdf["embedding"].to_numpy())
-            if planes is None:
-                planes = _plane_matrix(emb.shape[1], n_planes, seed)
-            proj = emb.astype(np.float64) @ planes.T
-            bits = (proj > 0).astype(np.uint64)
-            sig = np.zeros(emb.shape[0], dtype=np.uint64)
-            for i in range(n_planes):
-                sig |= bits[:, i] << np.uint64(i)
-            yield pd.DataFrame({"id": pdf[id_col], "sig": sig.astype(np.int64)})
-
-    return df.select(F.col(id_col), "embedding").mapInPandas(sign_batch, schema="id long, sig long")
-
-
 def rademacher_planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     """±1 sign planes derived from the deterministic hash matrix."""
     return np.where(_plane_matrix(dim, n_planes, seed) > 0, 1, -1).astype(np.int64)
@@ -101,8 +80,9 @@ def rademacher_signature(emb_col, planes: np.ndarray):
     embeddings: qⱼ = floor(embⱼ·2^20) is exact on any engine (scaling by a
     power of two is lossless), the ±1 dot product is an integer sum, and
     the sign test can never flip on float summation order — which makes
-    the signature bit-for-bit reproducible in the DuckDB oracle (the
-    float-plane mapInPandas path stays for production throughput)."""
+    the signature bit-for-bit reproducible in the DuckDB oracle. The
+    production path computes the same bits with
+    ``rademacher_signatures_arrow``; this expression is its reference."""
     q = F.transform(emb_col, lambda x: F.floor(x.cast("double") * F.lit(QUANT_SCALE)).cast("long"))
     sig = F.lit(0).cast("long")
     for p in range(planes.shape[0]):
@@ -151,9 +131,10 @@ def ann_lsh_topk_catalyst(
     qid_col: str = "qid",
     cid_col: str = "cid",
 ) -> DataFrame:
-    """ann_lsh_topk with the oracle-exact Rademacher signature: integer
+    """Approximate top-k with the oracle-exact Rademacher signature: integer
     quantized sign projections (Arrow kernel, bit-identical to the
-    Catalyst/SQL formulation), bands, join, and exact cosine re-rank."""
+    Catalyst/SQL formulation), pigeonhole signature bands, bucket join, and
+    exact cosine re-rank of the candidates only."""
     planes = rademacher_planes(dim, n_planes, seed)
     n_bands = n_planes // band_bits
     # no spread here (unlike cosine_topk_bruteforce): the signature kernel
@@ -193,158 +174,6 @@ def ann_lsh_topk_catalyst(
     w = Window.partitionBy(qid_col).orderBy(F.col("cos").desc(), F.col(cid_col).asc())
     return (
         cand.select(qid_col, cid_col, cosine(F.col("q_emb"), F.col("c_emb")).alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def ann_lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_planes: int = 16,
-    band_bits: int = 2,  # 8×2-bit bands: ~0.99 top-3 recall on random 64-d
-    seed: int = 7,
-    qid_col: str = "qid",
-    cid_col: str = "cid",
-) -> DataFrame:
-    """Approximate top-k: bucket-join on LSH signature bands (pigeonhole
-    prefix bands), exact cosine re-rank of candidates only."""
-    n_bands = n_planes // band_bits
-    qs = random_hyperplane_signatures(queries.withColumnRenamed(qid_col, "vec_id"), n_planes, seed)
-    cs = random_hyperplane_signatures(corpus.withColumnRenamed(cid_col, "vec_id"), n_planes, seed)
-
-    def bands(df: DataFrame) -> DataFrame:
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftrightunsigned(F.col("sig"), b * band_bits)
-                    .bitwiseAND(F.lit(2**band_bits - 1))
-                    .alias("key"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return df.select("id", F.explode(arr).alias("b")).select(
-            "id", F.col("b.band").alias("band"), F.col("b.key").alias("key")
-        )
-
-    qb = bands(qs).withColumnRenamed("id", qid_col)
-    cb = bands(cs).withColumnRenamed("id", cid_col)
-    cand_ids = (
-        qb.join(cb, ["band", "key"])
-        .filter(F.col(qid_col) != F.col(cid_col))
-        .select(qid_col, cid_col)
-        .distinct()
-    )
-    q = queries.select(F.col(qid_col), F.col("embedding").alias("q_emb"))
-    c = corpus.select(F.col(cid_col), F.col("embedding").alias("c_emb"))
-    cand = cand_ids.join(F.broadcast(q), qid_col).join(c, cid_col)
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos").desc(), F.col(cid_col).asc())
-    return (
-        cand.select(qid_col, cid_col, cosine(F.col("q_emb"), F.col("c_emb")).alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — the second scale path the brief names
-# ---------------------------------------------------------------------------
-
-
-def ivf_centroids(
-    corpus: DataFrame,
-    n_cells: int = 64,
-    sample_n: int = 4096,
-    iters: int = 8,
-    cid_col: str = "cid",
-) -> np.ndarray:
-    """Spherical k-means coarse quantizer trained on a DETERMINISTIC sample
-    (lowest xxhash64 of the id — partition-independent), driver-side numpy.
-    The sample and the centroid matrix are dimension-sized (≤ sample_n×dim
-    floats), the one justified collect in this operator — same pattern as
-    the polygon-cover broadcast in spatial.py."""
-    samp = (
-        corpus.select(cid_col, "embedding")
-        .withColumn("_h", F.xxhash64(F.col(cid_col).cast("string")))
-        .orderBy("_h")
-        .limit(sample_n)
-    )
-    X = np.array([list(r.embedding) for r in samp.collect()], dtype=np.float64)
-    X /= np.linalg.norm(X, axis=1, keepdims=True) + 1e-12
-    n_cells = min(n_cells, X.shape[0])
-    cents = X[:n_cells].copy()
-    for _ in range(iters):
-        assign = (X @ cents.T).argmax(axis=1)
-        for j in range(n_cells):
-            m = assign == j
-            if m.any():
-                v = X[m].sum(axis=0)
-                cents[j] = v / (np.linalg.norm(v) + 1e-12)
-    return cents
-
-
-def _assign_cells(df: DataFrame, cents: np.ndarray, id_col: str, n_probe: int) -> DataFrame:
-    """(id, embedding) → (id, cell, embedding) rows: nearest centroid for
-    corpus rows (n_probe=1) or the n_probe nearest cells for queries.
-    One Arrow batch at a time; the centroid matrix ships in the closure."""
-
-    def ac(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                # np.array([]) is 1-D → axis-1 norm would raise (ADVICE r3)
-                continue
-            X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            Xn = X / (np.linalg.norm(X, axis=1, keepdims=True) + 1e-12)
-            sims = Xn @ cents.T
-            if n_probe == 1:
-                cells = sims.argmax(axis=1)[:, None]
-            else:
-                cells = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-            ids = pdf[id_col].to_numpy()
-            emb = pdf["embedding"].tolist()
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(ids, cells.shape[1]),
-                    "cell": cells.ravel().astype(np.int32),
-                    "embedding": [e for e in emb for _ in range(cells.shape[1])],
-                }
-            )
-
-    return df.mapInPandas(ac, schema=f"{id_col} long, cell int, embedding array<float>")
-
-
-def ann_ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_cells: int = 64,
-    n_probe: int = 8,
-    qid_col: str = "qid",
-    cid_col: str = "cid",
-) -> DataFrame:
-    """IVF ANN: coarse-quantize the corpus into inverted cells, probe each
-    query's n_probe nearest cells, exact cosine re-rank inside the probed
-    cells. The CELL is the shuffle key — at 10^12 rows each bucket holds
-    ~corpus/n_cells rows and the candidate set per query is
-    n_probe/n_cells of the corpus, vs O(n·q) brute force. Deterministic
-    end-to-end (hash-ordered sample, fixed Lloyd iterations)."""
-    cents = ivf_centroids(corpus, n_cells, cid_col=cid_col)
-    c_cells = _assign_cells(corpus.select(cid_col, "embedding"), cents, cid_col, 1)
-    q_cells = _assign_cells(queries.select(qid_col, "embedding"), cents, qid_col, n_probe)
-    cand = c_cells.alias("c").join(q_cells.alias("q"), "cell").filter(
-        F.col(f"q.{qid_col}") != F.col(f"c.{cid_col}")
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.col("cos").desc(), F.col(cid_col).asc())
-    return (
-        cand.select(
-            F.col(f"q.{qid_col}").alias(qid_col),
-            F.col(f"c.{cid_col}").alias(cid_col),
-            cosine(F.col("q.embedding"), F.col("c.embedding")).alias("cos"),
-        )
-        .distinct()  # a (q,c) pair can meet in several probed cells
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from maplibre_tile_spec_spark.functions import geom as G
 from maplibre_tile_spec_spark.functions import tilemath as TM
 from maplibre_tile_spec_spark.functions import wkt as W
+from maplibre_tile_spec_spark.session import scoped_materialize
 
 EARTH_CIRCUMFERENCE_KM = 40075.017
 
@@ -343,6 +344,11 @@ def _knn_ring_pass(
     return resolved, resolved_ids, topk
 
 
+# ring passes before the broadcast fallback, and the ring's growth per pass
+KNN_PASSES = 2
+KNN_RING_GROWTH = 4
+
+
 def knn_join(
     queries: DataFrame,
     points: DataFrame,
@@ -351,18 +357,16 @@ def knn_join(
     ring: int = 2,
     qid_col: str = "qid",
     pid_col: str = "pid",
-    expansion_passes: int = 2,
-    ring_growth: int = 4,
 ) -> DataFrame:
     """Exact k-nearest-neighbors → (qid, pid, dist_km, rank).
 
     queries: (qid, lon, lat, k); points: (pid, lon, lat).
 
     Iterative cell-ring expansion (the S2 ring-expansion pattern in
-    quadtree coordinates): pass p searches ring·growth^p cells; queries
-    whose kth distance is provably final drop out; the rare remainder after
-    ``expansion_passes`` takes an exact broadcast pass. All passes are pure
-    DataFrame ops over the same bucketed points.
+    quadtree coordinates): pass p searches ring·KNN_RING_GROWTH^p cells;
+    queries whose kth distance is provably final drop out; the rare
+    remainder after KNN_PASSES passes takes an exact broadcast pass. All
+    passes are pure DataFrame ops over the same bucketed points.
     """
     pts = points.select(
         F.col(pid_col),
@@ -376,12 +380,12 @@ def knn_join(
     cached_passes: list[DataFrame] = []
     r = ring
     all_resolved = False
-    for _ in range(expansion_passes):
+    for _ in range(KNN_PASSES):
         resolved, resolved_ids, topk = _knn_ring_pass(remaining, pts, level, r, k_col, qid_col, pid_col)
         resolved_parts.append(resolved.select(qid_col, pid_col, "dist_km", "rank"))
         cached_passes.append(topk)
         remaining = remaining.join(F.broadcast(resolved_ids), qid_col, "left_anti")
-        r *= ring_growth
+        r *= KNN_RING_GROWTH
         # bounded early-exit probe: when a pass resolves every query (the
         # common case — the ring bound is designed to), the later passes and
         # the broadcast fallback would still submit their full job chains
@@ -430,11 +434,7 @@ def knn_join(
     # materialize once through the per-pass caches, then release them:
     # the returned result stays persisted (output-sized, lineage intact),
     # nothing input-sized is pinned across the caller's session
-    out = out.persist()
-    out.count()
-    for topk in cached_passes:
-        topk.unpersist()
-    return out
+    return scoped_materialize(out, *cached_passes)
 
 
 # ---------------------------------------------------------------------------

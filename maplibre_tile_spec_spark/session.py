@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -47,3 +47,26 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def scoped_materialize(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
+    """Materialize ``result`` once (its single action is served by the
+    persisted ``intermediates``), then release the intermediates before
+    returning. The returned DataFrame stays persisted — bounded by OUTPUT
+    size, with lineage intact, so evicted/lost blocks recompute from source
+    — and nothing input-sized is pinned across the caller's session.
+    Callers may ``unpersist()`` the result when done.
+
+    The intermediates are released on the error path too, and so is the
+    result when its action raises: a failing query leaves nothing pinned.
+    """
+    out = result.persist()
+    try:
+        out.count()
+    except BaseException:
+        out.unpersist()
+        raise
+    finally:
+        for df in intermediates:
+            df.unpersist()
+    return out

@@ -109,6 +109,13 @@ class TestByteRle:
         assert np.array_equal(dec, b)
 
 
+def _small_step_walk() -> np.ndarray:
+    """2-byte values, 1-byte deltas, too few delta runs to gate in RLE:
+    AUTO selects plain delta."""
+    steps = np.random.RandomState(7).choice([-3, -2, -1, 1, 2, 3], 500)
+    return 1000 + np.cumsum(steps)
+
+
 class TestIntStreamSelection:
     def test_const_stream_forced_rle(self):
         # 4×1: size tie with plain, but const ⇒ RLE (IntegerEncoder.java:294-296,359-361)
@@ -125,6 +132,23 @@ class TestIntStreamSelection:
         v = rng.randint(0, 2**20, 500)
         r = K.encode_int_stream(v, signed=False)
         assert (r.llt1, r.llt2) == (K.LLT_NONE, K.LLT_NONE)
+
+    @pytest.mark.parametrize("signed", [False, True])
+    @pytest.mark.parametrize("shape", ["const", "ascending", "random", "walk"])
+    def test_each_selection_roundtrips(self, shape, signed):
+        v, llts = {
+            "const": (np.array([1, 1, 1, 1]), (K.LLT_RLE, K.LLT_NONE)),
+            "ascending": (np.arange(1000), (K.LLT_DELTA, K.LLT_RLE)),
+            "random": (np.random.RandomState(7).randint(0, 2**20, 500), (K.LLT_NONE, K.LLT_NONE)),
+            "walk": (_small_step_walk(), (K.LLT_DELTA, K.LLT_NONE)),
+        }[shape]
+        r = K.encode_int_stream(v, signed=signed)
+        assert (r.llt1, r.llt2) == llts
+        out, _ = K.decode_int_stream(
+            r.payload, 0, r.num_values, len(r.payload), r.llt1, r.llt2, signed,
+            num_runs_meta=r.num_runs, num_rle_values=r.num_rle_values,
+        )
+        assert np.array_equal(out, v)
 
     @given(int32s, st.booleans())
     @settings(max_examples=60, deadline=None)
@@ -219,29 +243,6 @@ class TestStreamMetadata:
             assert (meta["runs"], meta["num_rle_values"]) == extra
         if llt1 == K.LLT_MORTON:
             assert (meta["num_bits"], meta["coordinate_shift"]) == extra
-
-
-class TestForcedOptions:
-    @pytest.mark.parametrize("option", ["plain", "delta", "rle", "delta_rle"])
-    @given(int32s, st.booleans())
-    @settings(max_examples=25, deadline=None)
-    def test_forced_roundtrip(self, option, vals, signed):
-        v = np.array(vals, dtype=np.int64)
-        if not signed:
-            v = np.minimum(np.abs(v), 2**31 - 1)
-        r = K.encode_int_stream(v, signed=signed, option=option)
-        out, _ = K.decode_int_stream(
-            r.payload, 0, r.num_values, len(r.payload), r.llt1, r.llt2, signed,
-            num_runs_meta=r.num_runs,
-        )
-        assert np.array_equal(out, v)
-
-    def test_forced_matches_reference_techniques(self):
-        v = np.arange(100)
-        assert K.encode_int_stream(v, False, option="plain").llt1 == K.LLT_NONE
-        assert K.encode_int_stream(v, False, option="delta").llt1 == K.LLT_DELTA
-        r = K.encode_int_stream(v, False, option="delta_rle")
-        assert (r.llt1, r.llt2) == (K.LLT_DELTA, K.LLT_RLE)
 
 
 class TestFastPfor:

@@ -478,6 +478,80 @@ class TestInspect:
         ]
         assert C.decode_tile(buf)[0].props["name:en"] == ["a", "b", None]
 
+    @staticmethod
+    def _every_kind_tile() -> bytes:
+        """Two layers that together carry every column kind encode_layer
+        emits: u32 and u64 ids, GEOMETRY and GEOMETRY_Z, each scalar and
+        logical type, struct, LIST (string and int elements), MAP, VEC2,
+        VEC3 and RANGE_MAP, nullable and not."""
+        rng = np.random.RandomState(3)
+        plain = C.LayerData(
+            "plain", 4096, _mk_geometry([C.MLT_POINT] * 3, rng),
+            ids=np.array([1, 2**40, 3]), has_long_ids=True,
+            props=[C.PropColumn("s", "string", ["a", None, "c"])],
+        )
+        g = _mk_geometry([C.MLT_LINESTRING] * 3, rng)
+        g.z = rng.randint(-100, 100, g.vertices.shape[0] // 2).astype(np.int64)
+        ext = C.LayerData(
+            "ext", 4096, g, ids=np.arange(3),
+            props=[
+                C.PropColumn("b", "boolean", [True, None, False]),
+                C.PropColumn("i", "int32", [1, -2, 3], nullable=False),
+                C.PropColumn("u", "uint64", [None, 5, 2**40]),
+                C.PropColumn("f", "float", [1.5, None, -2.0]),
+                C.PropColumn("d", "double", [0.25, 1.0, 2.0], nullable=False),
+                C.PropColumn("str", "string", ["x", "y", "x"], nullable=False),
+                C.PropColumn("empty", "string", [None, None, None]),
+                C.PropColumn("day", "date", [19000, None, 20000]),
+                C.PropColumn("ts", "timestamp", [0, 1700000000000, None]),
+                C.PropColumn("j", "json", ['{"a":1}', None, "[]"]),
+            ],
+            structs=[C.StructColumn("name", [("", ["n", None, "m"]), (":en", [None, "e", None])])],
+            lists=[
+                C.ListColumn("tags", "string", [["a", "b"], None, []]),
+                C.ListColumn("nums", "int64", [[1], [2, 3], []], nullable=False),
+            ],
+            maps=[C.MapColumn("m", [{"k": "v"}, None, {}])],
+            vecs=[
+                C.VecColumn("v2", "int32", [(1, 2), None, (3, 4)]),
+                C.VecColumn("v3", "double", [(1.0, 2.0, 3.0)] * 3, dims=3, nullable=False),
+            ],
+            range_maps=[C.RangeMapColumn("rm", [[(0.0, 0.5, "p")], None, []])],
+            extensions=True,
+        )
+        return C.encode_tile([plain, ext])
+
+    def test_inspect_every_column_kind(self):
+        buf = self._every_kind_tile()
+        recs = C.inspect_tile(buf)
+        per_layer = {}
+        for r in recs:
+            per_layer.setdefault(r["layer"], []).append(r["column"])
+        assert list(dict.fromkeys(per_layer["plain"])) == ["id", "geometry", "s"]
+        assert list(dict.fromkeys(per_layer["ext"])) == [
+            "id", "geometry", "b", "i", "u", "f", "d", "str", "empty", "day", "ts", "j",
+            "name", "name:en", "tags", "nums", "m", "v2", "v3", "rm",
+        ]
+        # GEOMETRY_Z: the counted geometry streams, then one z per vertex
+        z = [r for r in recs if r["layer"] == "ext" and r["column"] == "geometry"][-1]
+        n_z = len(C.decode_tile(buf)[1].geometry.z)
+        assert (z["stream"], z["technique"], z["num_values"]) == ("data", "none", n_z)
+        m = [r["stream"] for r in recs if r["column"] == "m"]
+        assert m[:2] == ["present", "length"] and len(m) >= 4  # + keys + values
+        assert sum(r["byte_length"] for r in recs) < len(buf)
+        assert [la.name for la in C.decode_tile(buf)] == ["plain", "ext"]
+
+    def test_inspect_rejects_walk_short_of_frame_end(self):
+        frame = self._every_kind_tile()
+        from maplibre_tile_spec_spark.functions import kernels as K
+
+        length, pos = K.varint_decode(frame, 1, 0)
+        first = frame[: pos + int(length[0])]
+        body = first[pos:] + b"\x00"  # one byte no column accounts for
+        padded = K.varint_encode(np.array([len(body)], dtype=np.uint64)) + body
+        with pytest.raises(ValueError, match="column walk"):
+            C.inspect_tile(padded)
+
 
 class TestUnknownFrameCopy:
     def test_long_unknown_frame_copies_length_varint(self):
