@@ -16,4 +16,10 @@ Layout:
     streaming/   structured-streaming variants of the batch operators
 """
 
+from maplibre_tile_spec_spark import _zipimport_guard
+
 __version__ = "0.1.0"
+
+# every Python worker imports this package when it unpickles an engine
+# kernel, so installing here reaches all sessions, ``--py-files`` included
+_zipimport_guard.install()

@@ -39,9 +39,15 @@ def extract_geom_spans(docs: DataFrame) -> DataFrame:
 
 _TYPE_CODE_MAP = {name: code for name, code in W.TYPE_CODES.items()}
 
-#: numeric WKT token, or the "\n" row separator of the batch parser's
+#: numeric WKT token (sign, digits, optional fraction and exponent)
+_NUM = r"-?[0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?"
+
+#: numeric token, or the "\n" row separator of the batch parser's
 #: one-pass extraction (the separators let it check token counts per row)
-_TOKEN_RE = re.compile(r"-?[0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?|\n")
+_TOKEN_RE = re.compile(_NUM + r"|\n")
+
+#: a whole POINT row holding exactly two numeric tokens
+_POINT_RE = re.compile(rf"^\s*POINT\s*\(\s*({_NUM})\s+({_NUM})\s*\)\s*$", re.IGNORECASE)
 
 #: first "lon lat" pair after the opening paren — the representative point
 #: (identical to ``_parse_batch``'s rep, which is the first vertex for every
@@ -92,9 +98,17 @@ def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     x1 = np.empty(n)
     y1 = np.empty(n)
 
+    def parse_rows(idx) -> None:
+        # the structural per-row parser: raises on a malformed row
+        for i in idx:
+            _gt, coords, _structure = W.parse_wkt(wkts.iloc[i])
+            rlon[i], rlat[i] = coords[0, 0], coords[0, 1]
+            x0[i], y0[i] = coords.min(axis=0)
+            x1[i], y1[i] = coords.max(axis=0)
+
     is_point = (gts == W.GT_POINT).to_numpy()
     if is_point.any():
-        pts = wkts[is_point].str.extract(r"\(\s*(-?[0-9.]+)\s+(-?[0-9.]+)")
+        pts = wkts[is_point].str.extract(_POINT_RE)
         px = pts[0].astype(float).to_numpy()
         py = pts[1].astype(float).to_numpy()
         rlon[is_point] = px
@@ -103,6 +117,10 @@ def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         y0[is_point] = py
         x1[is_point] = px
         y1[is_point] = py
+        # a POINT not read as exactly two numbers (EMPTY, Z/M, stray token)
+        # must raise, not become a NaN rep point that Spark turns into NULL
+        # and the tiler drops into the last tile
+        parse_rows(np.flatnonzero(is_point)[pts[0].isna().to_numpy()])
 
     rest_idx = np.flatnonzero(~is_point)
     if rest_idx.shape[0]:
@@ -148,11 +166,7 @@ def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
             # even/odd split would corrupt every row after the bad one —
             # fall back to the structural per-row parser for the whole
             # remainder, which raises on the offending row instead
-            for i in rest_idx:
-                _gt, coords, _structure = W.parse_wkt(wkts.iloc[i])
-                rlon[i], rlat[i] = coords[0, 0], coords[0, 1]
-                x0[i], y0[i] = coords.min(axis=0)
-                x1[i], y1[i] = coords.max(axis=0)
+            parse_rows(rest_idx)
 
     return pd.DataFrame(
         {

@@ -394,6 +394,25 @@ class TestStorageRelease:
         assert sc.getPersistentRDDs().size() == baseline
 
 
+class TestWorkerImportGuard:
+    def test_kernel_workers_run_the_zipimport_guard(self, spark):
+        """A worker imports the package when it unpickles an engine kernel,
+        so the stat guard is in place before its next task's cache reset."""
+        import pandas as pd
+
+        from maplibre_tile_spec_spark import _zipimport_guard
+
+        def report(batches):
+            import zipimport
+
+            lazy = hasattr(zipimport.zipimporter, "_get_files")
+            for _ in batches:
+                yield pd.DataFrame({"ok": [_zipimport_guard.installed() or lazy]})
+
+        rows = spark.range(8).repartition(4).mapInPandas(report, "ok boolean").collect()
+        assert rows and all(r.ok for r in rows)
+
+
 class TestIncrementalDedup:
     """Incremental dedup against a persisted bucketed band store must be
     indistinguishable from a full recompute over old ∪ new, and must never

@@ -318,3 +318,63 @@ class TestFastPfor:
             signed=True, plt=K.PLT_FASTPFOR,
         )
         assert np.array_equal(out, v)
+
+
+class TestZipimportGuard:
+    """PySpark invalidates import caches before every Python task; the
+    package's guard keeps a zipimporter from re-reading an unchanged archive
+    while still re-reading one that changed."""
+
+    @staticmethod
+    def _write_zip(path, modules):
+        import zipfile
+
+        with zipfile.ZipFile(path, "w") as zf:
+            for name, src in modules.items():
+                zf.writestr(name, src)
+
+    def test_unchanged_archive_not_reread_changed_archive_is(self, tmp_path, monkeypatch):
+        import importlib
+        import sys
+        import zipimport
+
+        import maplibre_tile_spec_spark  # noqa: F401  (installs the guard)
+
+        archive = str(tmp_path / "mods.zip")
+        self._write_zip(archive, {"pkg/__init__.py": "", "pkg/a.py": "A = 1\n"})
+        monkeypatch.setattr(sys, "path", [archive, *sys.path])
+        try:
+            assert importlib.import_module("pkg.a").A == 1
+            reads = []
+            real = zipimport._read_directory
+            monkeypatch.setattr(
+                zipimport, "_read_directory", lambda p: (reads.append(p), real(p))[1]
+            )
+            importlib.invalidate_caches()
+            importlib.invalidate_caches()
+            if not hasattr(zipimport.zipimporter, "_get_files"):  # eager before 3.13
+                assert reads == []
+
+            self._write_zip(
+                archive, {"pkg/__init__.py": "", "pkg/a.py": "A = 1\n", "pkg/b.py": "B = 2\n"}
+            )
+            importlib.invalidate_caches()
+            assert importlib.import_module("pkg.b").B == 2
+
+            os.remove(archive)
+            importlib.invalidate_caches()
+        finally:
+            for name in ("pkg.b", "pkg.a", "pkg"):
+                sys.modules.pop(name, None)
+            for key in [k for k in sys.path_importer_cache if k.startswith(archive)]:
+                del sys.path_importer_cache[key]
+
+    def test_install_is_idempotent(self):
+        import zipimport
+
+        from maplibre_tile_spec_spark import _zipimport_guard as G
+
+        before = zipimport.zipimporter.invalidate_caches
+        G.install()
+        assert zipimport.zipimporter.invalidate_caches is before
+        assert G.installed() != hasattr(zipimport.zipimporter, "_get_files")

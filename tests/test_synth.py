@@ -220,3 +220,42 @@ class TestFeatureBatchGuards:
         out = _parse_batch(pdf)
         assert out.loc[0, "rep_lon"] == 1.0 and out.loc[0, "lat_max"] == 4.0
         assert out.loc[1, "rep_lon"] == 5.0
+
+    def test_exponent_points_match_structural_parse(self):
+        import pandas as pd
+
+        from maplibre_tile_spec_spark.operators.features import _parse_batch
+
+        wkts = ["POINT (1e-05 2.5)", "POINT (-3.5E+1 40)", "point(7 -1.25e2)", "POINT (5 6)"]
+        pdf = pd.DataFrame({"doc_id": list("abcd"), "span_offset": [0] * 4, "wkt": wkts})
+        out = _parse_batch(pdf)
+        for i, w in enumerate(wkts):
+            _gt, coords, _s = W.parse_wkt(w)
+            x, y = coords[0]
+            assert out.loc[i, ["rep_lon", "rep_lat"]].tolist() == [x, y]
+            assert out.loc[i, ["lon_min", "lat_min", "lon_max", "lat_max"]].tolist() == [x, y, x, y]
+
+    @pytest.mark.parametrize("bad", ["POINT EMPTY", "POINT Z (1 2 3)", "POINT (1 2 3)"])
+    def test_unreadable_point_rows_raise(self, bad):
+        import pandas as pd
+
+        from maplibre_tile_spec_spark.operators.features import _parse_batch
+
+        pdf = pd.DataFrame({"doc_id": ["a", "b"], "span_offset": [0, 0], "wkt": ["POINT (1 2)", bad]})
+        with pytest.raises((ValueError, KeyError)):
+            _parse_batch(pdf)
+
+    def test_exponent_point_lands_in_its_decimal_twins_tile(self, spark):
+        """A NaN rep point becomes NULL in Spark, and the tile math's
+        greatest/least skip NULL: the feature used to land in tile
+        (2^z-1, 2^z-1) instead of its own."""
+        from maplibre_tile_spec_spark.operators.features import extract_features
+        from maplibre_tile_spec_spark.operators.tiler import encode_tiles
+
+        wkts = ["POINT (1e-05 2.5)", "POINT (0.00001 2.5)", "POINT (-3.5E+1 40)", "POINT (-35 40)"]
+        docs = spark.createDataFrame(
+            [(f"d{i}", [("geom", w, "", 0)]) for i, w in enumerate(wkts)],
+            "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+        )
+        tiles = {(r.x, r.y): r.n_features for r in encode_tiles(extract_features(docs), 3).collect()}
+        assert tiles == {(4, 3): 2, (3, 3): 2}
