@@ -205,7 +205,11 @@ class TestCompactCover:
         tracker = spark.sparkContext.statusTracker()
 
         def n_jobs() -> int:
-            return len(tracker.getJobIdsForGroup(None))
+            # newest job id + 1, not the number of retained ids: the status
+            # store evicts the oldest 10% once spark.ui.retainedJobs (1000)
+            # is passed, so a count can drop between two reads late in a
+            # long session, while job ids only grow
+            return max(tracker.getJobIdsForGroup(None), default=-1) + 1
 
         sp_mod._PIP_PROBE_CACHE.clear()
         before = n_jobs()
