@@ -1,4 +1,5 @@
-"""MLT codec: reference-fixture parity + self round-trip.
+"""MLT codec: reference-fixture parity, self round-trip, and byte anchors
+over a synthetic corpus (tests/data/codec_anchors.json, TestCodecAnchors).
 
 Parity model = the reference's own golden-file strategy (justfile:82-150,
 cpp/test/test_decode.cpp:77-94): decode the expected tiles under
@@ -8,6 +9,7 @@ the stored .mlt.geojson; additionally our re-encode is byte-exact for the
 four geometry classes that don't carry tessellation streams.
 """
 
+import hashlib
 import json
 import math
 import os
@@ -17,6 +19,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from maplibre_tile_spec_spark.functions import kernels as K
 from maplibre_tile_spec_spark.functions import mlt_codec as C
 
 FIXTURE_DIR = "/root/reference/test/expected/tag0x01/simple"
@@ -456,13 +459,16 @@ class TestInspect:
 
     def test_inspect_full_corpus(self):
         import glob
-        # every reference fixture (omt tiles carry shared-dict struct
-        # columns, the historical over-read regression)
-        for f in sorted(glob.glob("/root/reference/test/expected/tag0x01/**/*.mlt", recursive=True)):
-            buf = open(f, "rb").read()
+        # every reference fixture when present (omt tiles carry shared-dict
+        # struct columns, the historical over-read regression), and always
+        # the synthetic anchor corpus
+        fixtures = sorted(glob.glob("/root/reference/test/expected/tag0x01/**/*.mlt", recursive=True))
+        tiles = [open(f, "rb").read() for f in fixtures] + list(codec_corpus().values())
+        for buf in tiles:
             recs = C.inspect_tile(buf)
             assert len(recs) > 0
             assert sum(r["byte_length"] for r in recs) <= len(buf)
+        assert len(tiles) >= len(codec_corpus()) > 0
 
     def test_inspect_struct_tile(self):
         # regression: the declared shared-dict stream count (3+2*children)
@@ -877,3 +883,305 @@ class TestExtensionGate:
         )
         out = C.decode_tile(legacy)[0]
         assert out.props["tags"] == [["a"], ["b"]]
+
+
+# ---------------------------------------------------------------------------
+# codec byte anchors
+# ---------------------------------------------------------------------------
+
+CODEC_ANCHORS = os.path.join(os.path.dirname(__file__), "data", "codec_anchors.json")
+
+
+def _points(xy) -> C.GeometryColumn:
+    xy = np.asarray(xy, dtype=np.int64).ravel()
+    n = xy.shape[0] // 2
+    empty = np.empty(0, np.int64)
+    return C.GeometryColumn(np.zeros(n, np.int64), empty, empty, empty, xy)
+
+
+def _integer_props(n: int, rng: np.random.RandomState) -> list:
+    """One int column per logical technique: const, RLE, delta, delta+RLE
+    and plain, plus unsigned, 64-bit and nullable variants."""
+    counts = rng.randint(0, 2**31 - 1, n).tolist()
+    return [
+        C.PropColumn("const", "int32", [7] * n, nullable=False),
+        C.PropColumn("runs", "int32", [i // 25 * 3 - 4 for i in range(n)], nullable=False),
+        C.PropColumn("rising", "int32", np.cumsum(rng.randint(200, 5000, n)).tolist(), nullable=False),
+        C.PropColumn("step", "int32", [5 + 3 * i for i in range(n)], nullable=False),
+        C.PropColumn("noise", "int32", rng.randint(-(2**31), 2**31 - 1, n).tolist(), nullable=False),
+        C.PropColumn("count", "uint32", [None if i % 7 == 0 else v for i, v in enumerate(counts)]),
+        C.PropColumn("big", "int64", [2**40 + (i // 10) for i in range(n)], nullable=False),
+        C.PropColumn("ubig", "uint64", [None if i % 5 == 0 else 2**50 + 17 * i for i in range(n)]),
+    ]
+
+
+def _string_props(n: int, rng: np.random.RandomState) -> list:
+    """Plain (all unique), dictionary (few distinct) and FSST (long
+    repetitive values) string columns, nullable and not."""
+    streets = ["residential_street_primary", "residential_street_secondary", "service_road_parking"]
+    uids = [f"u{i:05d}-{rng.randint(10**6)}" for i in range(n)]
+    return [
+        C.PropColumn("uid", "string", uids, nullable=False),
+        C.PropColumn("kind", "string", [["shop", "", "café", None][i % 4] for i in range(n)]),
+        C.PropColumn(
+            "street", "string", [f"{streets[i % 3]}_{i % 29}" if i % 11 else None for i in range(n)],
+            use_fsst=True,
+        ),
+        C.PropColumn(
+            "label", "string", [streets[(i // 4) % 3] + str(i % 9) for i in range(n)],
+            nullable=False, use_fsst=True,
+        ),
+    ]
+
+
+def _complex_columns() -> dict:
+    """LIST, MAP, VEC2/VEC3 and RANGE_MAP columns over six features,
+    nullable and not."""
+    return dict(
+        lists=[
+            C.ListColumn("tags", "string", [["a", "b"], None, [], ["c"], ["a", "a", "d"], None]),
+            C.ListColumn("nums", "int64", [[1], [2, 3], [], [2**40], [-5, 0], [9]], nullable=False),
+            C.ListColumn("ratios", "double", [[0.5], None, [1.25, 2.0], [], None, [3.0]]),
+        ],
+        maps=[
+            C.MapColumn("m", [{"k": "v"}, None, {}, {"a": "1", "b": "2"}, {"k": "w"}, None]),
+            C.MapColumn("tags_map", [{"x": "y"}] * 6, nullable=False),
+        ],
+        vecs=[
+            C.VecColumn("v2", "int32", [(1, 2), None, (3, 4), (-5, 6), None, (0, 0)]),
+            C.VecColumn("v2l", "int64", [(2**40, -1)] * 6, nullable=False),
+            C.VecColumn("v3", "double", [(1.0, 2.5, -3.0)] * 6, dims=3, nullable=False),
+            C.VecColumn("v3f", "float", [(0.1, 0.2, 0.3), None] * 3, dims=3),
+        ],
+        range_maps=[
+            C.RangeMapColumn("rm", [[(0.0, 0.5, "p")], None, [], [(0.25, 0.75, "q"), (0.75, 1.0, "p")], None, []]),
+            C.RangeMapColumn("rm2", [[(0.0, 1.0, "all")]] * 6, nullable=False),
+        ],
+    )
+
+
+def _hand_frame(header: bytes, body: bytes, tag: int = C.TAG_EMBEDDED) -> bytes:
+    """Frame a layer header and column bodies the way encode_layer does."""
+    payload = C._varint1(tag) + header + body
+    return K.varint_encode(np.array([len(payload)], dtype=np.uint64)) + payload
+
+
+def _layer_header(name: str, columns: list[tuple[int, str | None]]) -> bytes:
+    """Layer name, extent 4096 and one (type code, column name) per column."""
+    out = C._put_string(name) + C._varint1(4096) + C._varint1(len(columns))
+    for tc, cname in columns:
+        out += C._varint1(tc) + (C._put_string(cname) if cname is not None else b"")
+    return out
+
+
+def _nullable_id_tile() -> bytes:
+    """Nullable u32 and u64 ID columns (type codes 1 and 3): a present
+    stream before the id data stream."""
+    out = b""
+    for name, tc, bits, ids in (
+        ("ids32", C.TC_ID_U32_NULL, 32, [3, None, 5, 9, None]),
+        ("ids64", C.TC_ID_U64_NULL, 64, [None, 2**40, 2**40 + 1, None, 7]),
+    ):
+        n_geo, geo = C.encode_geometry_column(_points(np.arange(10) * 97))
+        present = np.array([v is not None for v in ids])
+        body = C._boolean_stream(present, K.PST_PRESENT)
+        non_null = np.array([v for v in ids if v is not None], dtype=np.int64)
+        body += C._int_stream(non_null, False, K.PST_DATA, C.DT_NONE, bits=bits)
+        header = _layer_header(name, [(tc, None), (C.TC_GEOMETRY, None)])
+        out += _hand_frame(header, body + C._varint1(n_geo) + geo)
+    return out
+
+
+def _zero_stream_string_tile() -> bytes:
+    """A string column whose stream count is zero, between two columns
+    with streams."""
+    n_geo, geo = C.encode_geometry_column(_points(np.arange(6) * 501))
+    header = _layer_header("zs", [
+        (C.TC_GEOMETRY, None),
+        (C._SCALAR_CODES["string"] + 1, "nothing"),
+        (C._SCALAR_CODES["int32"], "rank"),
+    ])
+    body = C._varint1(n_geo) + geo + C._varint1(0)
+    body += C.encode_prop_column(C.PropColumn("rank", "int32", [1, 2, 3], nullable=False))
+    return _hand_frame(header, body)
+
+
+def codec_corpus() -> dict[str, bytes]:
+    """Deterministic synthetic tiles that together reach every encoding
+    branch of the codec, keyed by case name."""
+    rng = np.random.RandomState(2024)
+    n = 300
+
+    def tile(name: str, geometry: C.GeometryColumn, extent: int = 4096, **kw) -> bytes:
+        return C.encode_tile([C.LayerData(name, extent, geometry, **kw)])
+
+    def scatter(n_points: int, extent: int = 4096) -> C.GeometryColumn:
+        return _points(rng.randint(0, extent, 2 * n_points))
+
+    mixed = _mk_geometry([0, 1, 2, 3, 4, 5] * 4, rng)
+    # a random walk: neighbouring vertices are close, so plain deltas win
+    walk = 2000 + np.cumsum(rng.randint(-30, 31, mixed.vertices.shape).reshape(-1, 2), axis=0)
+    mixed.vertices = walk.ravel().astype(np.int64)
+    # few distinct vertices: on a diagonal the Hilbert dictionary wins, on
+    # a dense grid the Morton dictionary does
+    diag = np.column_stack([np.arange(20) * 200, np.arange(20) * 199])[np.repeat(np.arange(20), 5)]
+    grid = np.column_stack([np.tile(np.arange(8), 8), np.repeat(np.arange(8), 8)]) + 1000
+    polygons = _mk_geometry([C.MLT_POLYGON, C.MLT_POINT, C.MLT_MULTIPOLYGON, C.MLT_LINESTRING] * 3, rng)
+    lines = _mk_geometry([C.MLT_LINESTRING, C.MLT_MULTILINESTRING] * 3, rng)
+    lines.z = rng.randint(-500, 3000, lines.vertices.shape[0] // 2).astype(np.int64)
+    points = scatter(n)
+    long_ids = np.array([2**40] * 40 + [2**41 + 3 * i for i in range(40)], dtype=np.int64)
+    long_props = [C.PropColumn("big", "int64", long_ids.tolist(), nullable=False)]
+    ints = _integer_props(n, rng)
+    words = ["alpha", "beta", "gamma", "delta", "epsilon"]
+    return {
+        "geometry_plain": tile("mixed", mixed, ids=np.arange(24)),
+        "geometry_hilbert_dict": tile("diag", _points(diag), ids=np.arange(100)),
+        "geometry_morton_dict": tile("grid", _points(grid[rng.randint(0, 64, 300)]), ids=np.arange(300)),
+        "geometry_pretessellated": tile("land", polygons, ids=np.arange(12), tessellate=True),
+        "geometry_z": tile("z", lines, ids=np.arange(6), extensions=True),
+        "integers": tile("ints", points, ids=np.arange(n), props=ints),
+        "integers_fastpfor": tile("ints", points, ids=np.arange(n), props=ints, plt=K.PLT_FASTPFOR),
+        "long_ids_rle_off": tile("long", scatter(80), ids=long_ids, has_long_ids=True, props=long_props),
+        "long_ids_rle_on": tile(
+            "long", scatter(80), ids=long_ids, has_long_ids=True, props=long_props, long_auto_rle=True
+        ),
+        "strings": tile("strings", points, ids=np.arange(n), props=_string_props(n, rng)),
+        "structs": tile("places", points, ids=np.arange(n), structs=[
+            C.StructColumn("name", [
+                ("", [words[i % 5] for i in range(n)]),
+                (":en", [words[(i + 1) % 5] if i % 4 else None for i in range(n)]),
+                (":xx", [None] * n),
+            ]),
+        ]),
+        "structs_fsst": tile("places", points, ids=np.arange(n), use_fsst=True, structs=[
+            C.StructColumn("name", [
+                ("", [f"{words[i % 5]}_street_{i % 13}" for i in range(n)]),
+                (":de", [f"{words[i % 5]}strasse_{i % 17}" if i % 3 else None for i in range(n)]),
+            ]),
+            C.StructColumn("ref", [(":a", [f"A{i % 3}" for i in range(n)])]),
+        ]),
+        # boolean byte-RLE: long runs, a random bitmap (literal groups longer
+        # than 128 bytes) and a present stream; then both float widths
+        "booleans_floats": tile("flags", scatter(4 * n), props=[
+            C.PropColumn("blocks", "boolean", [i // 40 % 2 == 0 for i in range(4 * n)], nullable=False),
+            C.PropColumn("coin", "boolean", rng.randint(0, 2, 4 * n).astype(bool).tolist(), nullable=False),
+            C.PropColumn("maybe", "boolean", [None if i % 3 == 0 else i % 2 == 0 for i in range(4 * n)]),
+            C.PropColumn("f", "float", [None if i % 4 == 0 else i / 8 for i in range(4 * n)]),
+            C.PropColumn("d", "double", (rng.rand(4 * n) * 1e3).tolist(), nullable=False),
+        ]),
+        "complex_columns": tile("cx", scatter(6), ids=np.arange(6), extensions=True, **_complex_columns()),
+        "logical_types": tile("logical", scatter(5), ids=np.arange(5), extensions=True, props=[
+            C.PropColumn("day", "date", [19000, None, 20000, 19001, None]),
+            C.PropColumn("ts", "timestamp", [0, 1700000000000, None, 1700000000001, 5]),
+            C.PropColumn("doc", "json", ['{"a":1}', None, "[]", "null", '"s"']),
+            C.PropColumn("day2", "date", [1, 2, 3, 4, 5], nullable=False),
+        ]),
+        "multi_layer_unknown_frame": (
+            tile("a", scatter(4), ids=np.arange(4))
+            + _hand_frame(b"\x00opaque", b"", tag=7)
+            + tile("b", scatter(3, 512), 512, props=[C.PropColumn("w", "string", ["x", "y", "x"], nullable=False)])
+        ),
+        "hand_nullable_ids": _nullable_id_tile(),
+        "hand_zero_stream_string": _zero_stream_string_tile(),
+    }
+
+
+def _canonical(obj):
+    """A value → plain Python structure whose repr pins every decoded value
+    and array dtype."""
+    if isinstance(obj, np.ndarray):
+        return ("ndarray", str(obj.dtype), obj.tolist())
+    if hasattr(obj, "__dataclass_fields__"):
+        return (type(obj).__name__, {k: _canonical(getattr(obj, k)) for k in obj.__dataclass_fields__})
+    if isinstance(obj, dict):
+        return {k: _canonical(v) for k, v in obj.items()}
+    if isinstance(obj, (list, tuple)):
+        return type(obj)(_canonical(v) for v in obj)
+    return obj
+
+
+def _digest(data) -> dict:
+    raw = data if isinstance(data, bytes) else repr(_canonical(data)).encode()
+    return {"sha256": hashlib.sha256(raw).hexdigest(), "size": len(raw)}
+
+
+def codec_digests(tile: bytes) -> dict:
+    """sha256 and size of one tile and of everything the codec derives from
+    it: the re-encode under each rule set, a full decode, a decode that
+    projects every second property column, and the stream inspection."""
+    full = C.decode_tile(tile)
+    names = sorted({k for la in full for k in la.props})
+    out = {"encode": _digest(tile)}
+    for fixture_rules in (True, False):
+        for use_fsst in (True, False):
+            key = f"reencode(fixture_rules={fixture_rules}, use_fsst={use_fsst})"
+            out[key] = _digest(C.reencode_tile(tile, use_fsst=use_fsst, fixture_rules=fixture_rules))
+    out["decode"] = _digest(full)
+    out["decode(columns=every second)"] = _digest(C.decode_tile(tile, columns=set(names[::2])))
+    out["inspect"] = _digest(C.inspect_tile(tile))
+    return out
+
+
+class TestCodecAnchors:
+    """Codec bytes are pinned by committed anchors: every corpus tile, its
+    re-encodes, decodes and stream inspection must hash to the values in
+    tests/data/codec_anchors.json, so a refactor of the codec is checked
+    here without the reference fixture tree.
+
+    The anchors change only with a deliberate format change. Then run
+    ``python -m tests.test_mlt_codec`` from the repository root, which
+    rewrites the JSON from the current codec, and review which digests
+    moved before committing it."""
+
+    @pytest.mark.parametrize("case", sorted(codec_corpus()))
+    def test_digests_match_anchor(self, case):
+        with open(CODEC_ANCHORS) as f:
+            want = json.load(f)[case]
+        got = codec_digests(codec_corpus()[case])
+        assert got == want
+
+    def test_every_case_is_anchored(self):
+        with open(CODEC_ANCHORS) as f:
+            assert sorted(json.load(f)) == sorted(codec_corpus())
+
+    def test_corpus_reaches_every_branch(self):
+        corpus = codec_corpus()
+        recs = {name: C.inspect_tile(tile) for name, tile in corpus.items()}
+        techniques = {r["technique"] for rs in recs.values() for r in rs}
+        assert {"none", "delta", "rle", "delta+rle", "componentwise_delta", "morton+delta"} <= techniques
+
+        def geometry_streams(name):
+            return {(r["stream"], r["technique"]) for r in recs[name] if r["column"] == "geometry"}
+
+        plain, hilbert, morton = (
+            geometry_streams(f"geometry_{kind}") for kind in ("plain", "hilbert_dict", "morton_dict")
+        )
+        assert ("data", "componentwise_delta") in plain and "offset" not in {s for s, _ in plain}
+        assert ("data", "componentwise_delta") in hilbert and "offset" in {s for s, _ in hilbert}
+        assert ("data", "morton+delta") in morton
+        assert C.decode_tile(corpus["geometry_pretessellated"])[0].triangles is not None
+        assert C.decode_tile(corpus["geometry_z"])[0].geometry.z is not None
+        # FastPFOR and the u64 RLE rule change the bytes of the same layer
+        assert corpus["integers_fastpfor"] != corpus["integers"]
+        assert corpus["long_ids_rle_on"] != corpus["long_ids_rle_off"]
+        # string candidates: plain (2 streams), dictionary (3), FSST (5)
+        n_streams = {r["column"]: 0 for r in recs["strings"]}
+        for r in recs["strings"]:
+            n_streams[r["column"]] += 1
+        assert [n_streams[c] for c in ("uid", "kind", "street", "label")] == [2, 4, 6, 5]
+        # shared dictionaries: plain (2 streams) and FSST (4), each followed
+        # by the root child's present and offset streams under the same label
+        assert len([r for r in recs["structs"] if r["column"] == "name"]) == 4
+        assert len([r for r in recs["structs_fsst"] if r["column"] == "name"]) == 6
+        # boolean byte-RLE: a literal group longer than 128 bytes
+        coin = [r for r in recs["booleans_floats"] if r["column"] == "coin"]
+        assert coin[0]["byte_length"] > 129
+
+
+if __name__ == "__main__":
+    # regenerate the committed anchors (see TestCodecAnchors)
+    anchors = {name: codec_digests(tile) for name, tile in codec_corpus().items()}
+    with open(CODEC_ANCHORS, "w") as f:
+        json.dump(anchors, f, indent=1, sort_keys=True)
+        f.write("\n")
