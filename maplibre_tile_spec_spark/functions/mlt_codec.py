@@ -18,10 +18,16 @@ Format knowledge (studied, not copied):
   StringDecoder.java:140-238, BooleanEncoder.java:18-45
 * integer stream selection: IntegerEncoder.java:221-365 (via kernels.py)
 
-Supported: ID (u32/u64), GEOMETRY (plain / Hilbert-dict / Morton-dict vertex
-encodings, tessellation streams parsed-and-skipped on decode), BOOLEAN,
-INT_32/UINT_32/INT_64/UINT_64, FLOAT/DOUBLE, STRING plain+dictionary.
-FSST dictionaries decode via a from-scratch FSST symbol-table expander.
+Supported by encode, decode, re-encode and inspect: ID (u32/u64; nullable
+ID columns are read), GEOMETRY (plain / Hilbert-dict / Morton-dict vertex
+encodings, or the pretessellated layout: decode returns its triangle and
+index streams, re-encode recomputes them with earcut), BOOLEAN,
+INT_32/UINT_32/INT_64/UINT_64, FLOAT/DOUBLE, STRING (plain / dictionary /
+FSST dictionary) and shared-dictionary STRUCT; behind
+``LayerData.extensions``, GEOMETRY_Z, LIST, MAP, VEC2/VEC3, RANGE_MAP and
+the logical DATE/TIMESTAMP/JSON types. Decode and re-encode read a layer
+with one column walk (``_read_layer``); ``inspect_tile`` walks stream
+headers only.
 """
 
 from __future__ import annotations
@@ -897,7 +903,24 @@ def decode_tile(
             continue
         if layers is not None and _get_string(buf, pos)[0] not in layers:
             continue
-        out.append(_decode_layer(buf, pos, end, columns=columns))
+        name, extent, _body_pos, cols = _read_layer(buf, pos, end, columns)
+        ids = geometry = triangles = index_buffer = None
+        props: dict[str, list] = {}
+        prop_types: dict[str, str] = {}
+        for tc, cname, col in cols:
+            if isinstance(col, np.ndarray):
+                ids = col
+            elif tc <= TC_ID_U64_NULL:  # nullable ids surface without their nulls
+                ids = np.array([v for v in col.values if v is not None], dtype=np.int64)
+            elif isinstance(col, tuple):
+                geometry, triangles, index_buffer = col
+            elif isinstance(col, StructColumn):
+                props.update((cname + suffix, values) for suffix, values in col.children)
+            elif col is not None:
+                props[cname] = col.values
+            if tc & ~1 in _CODE_TO_LOGICAL:  # named even when projected away
+                prop_types[cname] = _CODE_TO_LOGICAL[tc & ~1]
+        out.append(DecodedLayer(name, extent, ids, geometry, props, triangles, index_buffer, prop_types))
     return out
 
 
@@ -917,190 +940,125 @@ def reencode_tile(buf: bytes, use_fsst: bool = True, fixture_rules: bool = True)
             # unknown frame: copy verbatim INCLUDING the full length varint
             out += bytes(buf[frame_start:end])
             continue
-        out += _reencode_layer(
-            buf, pos, end, use_fsst=use_fsst, fixture_rules=fixture_rules, tag=tag
-        )
+        _name, _extent, body_pos, cols = _read_layer(buf, pos, end)
+        # the layer header (name, extent, column types) is copied as read
+        payload = _varint1(tag) + bytes(buf[pos:body_pos])
+        for tc, _cname, col in cols:
+            payload += _reencode_column(tc, col, use_fsst, fixture_rules)
+        out += _varint1(len(payload)) + payload
     return out
 
 
-def _reencode_layer(
-    buf: bytes, pos: int, end: int, use_fsst: bool, fixture_rules: bool = True, tag: int = TAG_EMBEDDED
-) -> bytes:
-    name, extent, col_meta, pos = _read_layer_header(buf, pos)
-
-    meta = _put_string(name) + _varint1(extent) + _varint1(len(col_meta))
-    body = b""
-    for tc, cname, children in col_meta:
-        if tc in (TC_ID_U32, TC_ID_U32_NULL, TC_ID_U64, TC_ID_U64_NULL):
-            meta += _varint1(tc)
-            present = None
-            if tc & 1:
-                present, pos = _decode_boolean_stream(buf, pos)
-            m, pos = K.unpack_stream_metadata(buf, pos)
-            bits = 64 if tc >= TC_ID_U64 else 32
-            ids, pos = _decode_int_stream_with_meta(buf, pos, m, signed=False, bits=bits)
-            if present is not None:
-                body += _boolean_stream(present, K.PST_PRESENT)
-            body += _int_stream(np.asarray(ids, dtype=np.int64), False, K.PST_DATA, DT_NONE, bits=bits)
-        elif tc in (TC_GEOMETRY, TC_GEOMETRY_Z):
-            meta += _varint1(tc)
-            v, pos = K.varint_decode(buf, 1, pos)
-            g, triangles, _index_buffer, pos = _decode_geometry_column(buf, pos, int(v[0]))
-            if triangles is not None:
-                n_geo, geo = encode_geometry_column_pretessellated(g)
-            elif fixture_rules:
-                # fixtures are generated through the pre-tessellation path
-                # with morton disabled (MltConverter.java:583)
-                n_geo, geo = encode_geometry_column(g, use_morton=False, pretess_selection=True)
-            else:
-                n_geo, geo = encode_geometry_column(g)
-            body += _varint1(n_geo) + geo
-            if tc == TC_GEOMETRY_Z:
-                m, pos = K.unpack_stream_metadata(buf, pos)
-                zvals, pos = _decode_int_stream_with_meta(buf, pos, m, signed=True, bits=32)
-                body += _int_stream(
-                    np.asarray(zvals, dtype=np.int64), True, K.PST_DATA, DT_NONE, bits=32
-                )
-        elif tc == TC_STRUCT:
-            meta += _varint1(TC_STRUCT) + _put_string(cname)
-            meta += _varint1(len(children))
-            for ctc, ch in children:
-                meta += _varint1(ctc) + _put_string(ch if ch is not None else "")
-            props_struct, pos = _decode_shared_dict_struct(buf, pos, cname, children)
-            struct = StructColumn(
-                cname,
-                [(ch if ch is not None else "", props_struct[(cname or "") + (ch or "")]) for _ctc, ch in children],
-            )
-            body += encode_struct_column(struct, use_fsst=use_fsst)
-        elif tc & ~1 == TC_LIST:
-            elem = _CODE_TO_SCALAR[children[0][0] & ~1]
-            meta += _varint1(tc) + _put_string(cname) + _varint1(children[0][0])
-            values, pos = _decode_list_column(buf, pos, bool(tc & 1), elem)
-            body += encode_list_column(
-                ListColumn(cname, elem, values, nullable=bool(tc & 1)), use_fsst=use_fsst
-            )
-        elif tc & ~1 == TC_MAP:
-            meta += _varint1(tc) + _put_string(cname)
-            values, pos = _decode_map_column(buf, pos, bool(tc & 1))
-            body += encode_map_column(
-                MapColumn(cname, values, nullable=bool(tc & 1)), use_fsst=use_fsst
-            )
-        elif tc & ~1 in (TC_VEC2, TC_VEC3):
-            dims = 3 if tc & ~1 == TC_VEC3 else 2
-            elem = _CODE_TO_SCALAR[children[0][0] & ~1]
-            meta += _varint1(tc) + _put_string(cname) + _varint1(children[0][0])
-            values, pos = _decode_vec_column(buf, pos, bool(tc & 1), elem, dims)
-            body += encode_vec_column(
-                VecColumn(cname, elem, values, dims=dims, nullable=bool(tc & 1))
-            )
-        elif tc & ~1 == TC_RANGE_MAP:
-            meta += _varint1(tc) + _put_string(cname)
-            values, pos = _decode_range_map_column(buf, pos, bool(tc & 1))
-            body += encode_range_map_column(
-                RangeMapColumn(cname, values, nullable=bool(tc & 1)), use_fsst=use_fsst
-            )
+def _reencode_column(tc: int, col, use_fsst: bool, fixture_rules: bool) -> bytes:
+    """One column body from what ``_read_layer`` returned for it."""
+    if isinstance(col, np.ndarray):
+        return _int_stream(col, False, K.PST_DATA, DT_NONE, bits=64 if tc >= TC_ID_U64 else 32)
+    if isinstance(col, tuple):
+        g, triangles, _index_buffer = col
+        if triangles is not None:
+            n_geo, geo = encode_geometry_column_pretessellated(g)
+        elif fixture_rules:
+            # fixtures are generated through the pre-tessellation path
+            # with morton disabled (MltConverter.java:583)
+            n_geo, geo = encode_geometry_column(g, use_morton=False, pretess_selection=True)
         else:
-            logical = _CODE_TO_LOGICAL.get(tc & ~1)
-            scalar = _LOGICAL_PHYSICAL[logical] if logical else _CODE_TO_SCALAR[tc & ~1]
-            nullable = bool(tc & 1)
-            meta += _varint1(tc) + _put_string(cname)
-            if scalar == "string":
-                v, pos = K.varint_decode(buf, 1, pos)
-                n_streams = int(v[0])
-                if n_streams == 0:
-                    body += _varint1(0)
-                    continue
-                values, pos = _decode_string_column(buf, pos, n_streams, nullable)
-                body += encode_prop_column(PropColumn(cname, "string", values, nullable, use_fsst=use_fsst))
-            else:
-                values, pos = _decode_scalar_column(buf, pos, scalar, nullable)
-                body += encode_prop_column(PropColumn(cname, scalar, values, nullable))
-    payload = meta + body
-    tag_b = _varint1(tag)
-    return K.varint_encode(np.array([len(payload) + len(tag_b)], dtype=np.uint64)) + tag_b + payload
+            n_geo, geo = encode_geometry_column(g)
+        out = _varint1(n_geo) + geo
+        if g.z is not None:
+            out += _int_stream(g.z, True, K.PST_DATA, DT_NONE, bits=32)
+        return out
+    if isinstance(col, PropColumn):
+        if not col.values and _LOGICAL_PHYSICAL.get(col.type, col.type) == "string":
+            return _varint1(0)  # no values: the zero-stream form it is read from
+        col.use_fsst = use_fsst
+        return encode_prop_column(col)
+    if isinstance(col, VecColumn):
+        return encode_vec_column(col)
+    encoders = {
+        StructColumn: encode_struct_column,
+        ListColumn: encode_list_column,
+        MapColumn: encode_map_column,
+        RangeMapColumn: encode_range_map_column,
+    }
+    return encoders[type(col)](col, use_fsst=use_fsst)
 
 
-def _skip_scalar_column(buf: bytes, pos: int, scalar: str, nullable: bool) -> int:
-    """Advance over a scalar property column without decoding payloads."""
-    n_streams = 1 + (1 if nullable else 0)
+def _skip_streams(buf: bytes, pos: int, n_streams: int) -> int:
+    """Advance over ``n_streams`` streams without decoding payloads."""
     for _ in range(n_streams):
         meta, pos = K.unpack_stream_metadata(buf, pos)
         pos += meta["byte_length"]
     return pos
 
 
-def _decode_layer(buf: bytes, pos: int, end: int, columns: set[str] | None = None) -> DecodedLayer:
-    name, extent, col_meta, pos = _read_layer_header(buf, pos)
-
-    ids = None
-    geometry = None
-    triangles = None
-    index_buffer = None
-    props: dict[str, list] = {}
-    prop_types: dict[str, str] = {}
-    for tc, cname, children in col_meta:
-        if tc in (TC_ID_U32, TC_ID_U32_NULL, TC_ID_U64, TC_ID_U64_NULL):
-            if tc & 1:  # nullable id: skip present stream
-                meta, pos = K.unpack_stream_metadata(buf, pos)
-                pos += meta["byte_length"]
-            meta, pos = K.unpack_stream_metadata(buf, pos)
-            bits = 64 if tc >= TC_ID_U64 else 32
-            ids, pos = _decode_int_stream_with_meta(buf, pos, meta, signed=False, bits=bits)
+def _read_layer(
+    buf: bytes, pos: int, end: int, columns: set[str] | None = None
+) -> tuple[str, int, int, list]:
+    """Walk one layer's columns in file order → (name, extent, position of
+    the first column's streams, one ``(type code, name, column)`` per
+    column). Each column is the value-model object its encoder takes: the
+    ids array (like ``LayerData.ids``; a nullable ID column is a
+    ``PropColumn`` named "id"), ``PropColumn``, ``StructColumn``,
+    ``ListColumn``, ``MapColumn``, ``VecColumn``, ``RangeMapColumn``;
+    geometry is ``(GeometryColumn, triangles, index_buffer)``. A scalar
+    column left out by ``columns`` is skipped without decoding and reads as
+    None. Raises ``ValueError`` when the walk does not end exactly at the
+    frame end ``end``."""
+    name, extent, header, pos = _read_layer_header(buf, pos)
+    body_pos = pos
+    cols = []
+    for tc, cname, children in header:
+        kind, nullable = tc & ~1, bool(tc & 1)
+        elem = _CODE_TO_SCALAR.get(children[0][0] & ~1) if children else None  # LIST/VEC
+        if tc <= TC_ID_U64 and not nullable:
+            m, pos = K.unpack_stream_metadata(buf, pos)
+            col, pos = _decode_int_stream_with_meta(buf, pos, m, signed=False, bits=64 if tc == TC_ID_U64 else 32)
+        elif tc <= TC_ID_U64_NULL:  # nullable ids, which encode_layer never writes
+            id_type = "uint64" if tc >= TC_ID_U64 else "uint32"
+            values, pos = _decode_scalar_column(buf, pos, id_type, nullable)
+            col = PropColumn("id", id_type, values, nullable)
         elif tc in (TC_GEOMETRY, TC_GEOMETRY_Z):
             v, pos = K.varint_decode(buf, 1, pos)
-            geometry, triangles, index_buffer, pos = _decode_geometry_column(buf, pos, int(v[0]))
+            g, triangles, index_buffer, pos = _decode_geometry_column(buf, pos, int(v[0]))
             if tc == TC_GEOMETRY_Z:
                 m, pos = K.unpack_stream_metadata(buf, pos)
                 zvals, pos = _decode_int_stream_with_meta(buf, pos, m, signed=True, bits=32)
-                geometry.z = np.asarray(zvals, dtype=np.int64)
+                g.z = np.asarray(zvals, dtype=np.int64)
+            col = (g, triangles, index_buffer)
         elif tc == TC_STRUCT:
-            props_struct, pos = _decode_shared_dict_struct(buf, pos, cname, children)
-            props.update(props_struct)
-        elif tc & ~1 == TC_LIST:
-            elem = _CODE_TO_SCALAR[children[0][0] & ~1]
-            values, pos = _decode_list_column(buf, pos, bool(tc & 1), elem)
-            props[cname] = values
-        elif tc & ~1 == TC_MAP:
-            values, pos = _decode_map_column(buf, pos, bool(tc & 1))
-            props[cname] = values
-        elif tc & ~1 in (TC_VEC2, TC_VEC3):
-            dims = 3 if tc & ~1 == TC_VEC3 else 2
-            elem = _CODE_TO_SCALAR[children[0][0] & ~1]
-            values, pos = _decode_vec_column(buf, pos, bool(tc & 1), elem, dims)
-            props[cname] = values
-        elif tc & ~1 == TC_RANGE_MAP:
-            values, pos = _decode_range_map_column(buf, pos, bool(tc & 1))
-            props[cname] = values
+            col, pos = _decode_shared_dict_struct(buf, pos, cname, children)
+        elif kind == TC_LIST:
+            values, pos = _decode_list_column(buf, pos, nullable, elem)
+            col = ListColumn(cname, elem, values, nullable)
+        elif kind == TC_MAP:
+            values, pos = _decode_map_column(buf, pos, nullable)
+            col = MapColumn(cname, values, nullable)
+        elif kind in (TC_VEC2, TC_VEC3):
+            dims = 3 if kind == TC_VEC3 else 2
+            values, pos = _decode_vec_column(buf, pos, nullable, elem, dims)
+            col = VecColumn(cname, elem, values, dims, nullable)
+        elif kind == TC_RANGE_MAP:
+            values, pos = _decode_range_map_column(buf, pos, nullable)
+            col = RangeMapColumn(cname, values, nullable)
         else:
-            logical = _CODE_TO_LOGICAL.get(tc & ~1)
-            if logical is not None:
-                prop_types[cname] = logical
-                scalar = _LOGICAL_PHYSICAL[logical]
-            else:
-                scalar = _CODE_TO_SCALAR[tc & ~1]
-            nullable = bool(tc & 1)
-            wanted = columns is None or cname in columns
-            if scalar == "string":
+            ctype = _CODE_TO_LOGICAL.get(kind) or _CODE_TO_SCALAR[kind]
+            scalar = _LOGICAL_PHYSICAL.get(ctype, ctype)
+            n_streams = 1 + nullable
+            if scalar == "string":  # string columns carry a stream count
                 v, pos = K.varint_decode(buf, 1, pos)
                 n_streams = int(v[0])
-                if n_streams == 0:
-                    if wanted:
-                        props[cname] = []
-                    continue
-                if not wanted:  # projection pushdown: jump stream payloads
-                    for _ in range(n_streams):
-                        meta, pos = K.unpack_stream_metadata(buf, pos)
-                        pos += meta["byte_length"]
-                    continue
-                values, pos = _decode_string_column(buf, pos, n_streams, nullable)
-                props[cname] = values
-            else:
-                if not wanted:
-                    pos = _skip_scalar_column(buf, pos, scalar, nullable)
-                    continue
+            values = []
+            if columns is not None and cname not in columns:  # projection pushdown
+                values, pos = None, _skip_streams(buf, pos, n_streams)
+            elif scalar != "string":
                 values, pos = _decode_scalar_column(buf, pos, scalar, nullable)
-                props[cname] = values
-    return DecodedLayer(name, extent, ids, geometry, props, triangles, index_buffer, prop_types)
+            elif n_streams:
+                values, pos = _decode_string_column(buf, pos, n_streams, nullable)
+            col = None if values is None else PropColumn(cname, ctype, values, nullable)
+        cols.append((tc, cname, col))
+    if pos != end:
+        raise ValueError(f"layer {name!r}: column walk ends at byte {pos}, frame at {end}")
+    return name, extent, body_pos, cols
 
 
 def _reassemble_collections(present, lengths: np.ndarray, flat: list, build) -> list:
@@ -1287,12 +1245,14 @@ def _slice_strings(data: bytes, lengths: np.ndarray) -> list[str]:
     return out
 
 
-def _decode_shared_dict_struct(buf: bytes, pos: int, root_name: str, children: list) -> tuple[dict, int]:
+def _decode_shared_dict_struct(
+    buf: bytes, pos: int, root_name: str, children: list
+) -> tuple[StructColumn, int]:
     """Shared-dictionary struct (StringDecoder.decodeSharedDictionary)."""
     v, pos = K.varint_decode(buf, 1, pos)
     n_streams = int(v[0])
     if n_streams == 0:
-        return {}, pos
+        return StructColumn(root_name, []), pos
     dict_lengths = None
     dict_bytes = None
     sym_lengths = None
@@ -1320,12 +1280,12 @@ def _decode_shared_dict_struct(buf: bytes, pos: int, root_name: str, children: l
         strings = _slice_strings(corpus, dict_lengths)
     else:
         strings = _slice_strings(dict_bytes, dict_lengths)
-    props = {}
+    out = []
     for _tc, ch_name in children:
         v, pos = K.varint_decode(buf, 1, pos)
         ns = int(v[0])
         if ns == 0:  # no values present for this child in this tile
-            props[(root_name or "") + (ch_name or "")] = []
+            out.append((ch_name or "", []))
             continue
         if ns != 2:
             raise ValueError("struct child must have present+offset streams")
@@ -1339,9 +1299,8 @@ def _decode_shared_dict_struct(buf: bytes, pos: int, root_name: str, children: l
                 i += 1
             else:
                 vals.append(None)
-        full_name = (root_name or "") + (ch_name or "")
-        props[full_name] = vals
-    return props, pos
+        out.append((ch_name or "", vals))
+    return StructColumn(root_name, out), pos
 
 
 # ---------------------------------------------------------------------------
@@ -1652,8 +1611,8 @@ def gunzip_tile(buf: bytes) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# FSST decode (symbol-table expansion; encoder not needed for parity —
-# FsstEncoder.decode semantics: symbols ≤8 bytes, escape byte 255 copies
+# FSST: symbol-table construction (functions/fsst.py) and expansion
+# (FsstEncoder.decode semantics: symbols ≤8 bytes, escape byte 255 copies
 # the next byte verbatim; java/.../converter/encodings/fsst/Fsst.java:17-45)
 # ---------------------------------------------------------------------------
 
