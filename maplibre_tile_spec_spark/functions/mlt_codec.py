@@ -844,13 +844,19 @@ class DecodedLayer:
 def _iter_frames(buf: bytes) -> Iterator[tuple[int, int, int, int]]:
     """Framed blocks of a tile → ``(frame_start, tag, body_pos, frame_end)``.
     ``frame_start`` is BEFORE the length varint (it can span >1 byte); the
-    length counts the tag varint and the body."""
+    length counts the tag varint and the body. A frame that runs past the
+    buffer (a truncated tile) or ends inside its own tag raises
+    ``ValueError``."""
     pos, n = 0, len(buf)
     while pos < n:
         frame_start = pos
         v, pos = K.varint_decode(buf, 1, pos)
         frame_end = pos + int(v[0])
+        if frame_end > n:
+            raise ValueError(f"frame at byte {frame_start} ends at {frame_end}, past the tile end {n}")
         v, pos = K.varint_decode(buf, 1, pos)
+        if pos > frame_end:
+            raise ValueError(f"frame at byte {frame_start} ends at {frame_end}, inside its tag")
         yield frame_start, int(v[0]), pos, frame_end
         pos = frame_end
 
@@ -1251,8 +1257,8 @@ def _decode_shared_dict_struct(
     """Shared-dictionary struct (StringDecoder.decodeSharedDictionary)."""
     v, pos = K.varint_decode(buf, 1, pos)
     n_streams = int(v[0])
-    if n_streams == 0:
-        return StructColumn(root_name, []), pos
+    if n_streams == 0:  # no child has a value: encode_struct_column writes only the count
+        return StructColumn(root_name, [(ch_name or "", []) for _tc, ch_name in children]), pos
     dict_lengths = None
     dict_bytes = None
     sym_lengths = None
@@ -1495,6 +1501,8 @@ def inspect_tile(buf: bytes) -> list[dict]:
             elif tc == TC_STRUCT:
                 ns, p = K.varint_decode(buf, 1, p)
                 total = int(ns[0])
+                if total == 0:  # all-null struct: the count is the whole column
+                    continue
                 # shared dictionary streams: the declared count is
                 # 3+2*children (5+2*children with FSST) per StringEncoder,
                 # but only 2 (resp. 4) physical streams precede the children

@@ -267,6 +267,66 @@ class TestSharedDictStruct:
         assert la.props["name:fr"] == []  # zero-stream marker for empty child
 
 
+    def test_all_null_struct(self):
+        """A struct with no value in any child is one zero stream count;
+        every walker must read it as such and go on to the next column."""
+        g = _mk_geometry([C.MLT_POINT] * 3, np.random.RandomState(4))
+        structs = [
+            C.StructColumn("name", [("", [None] * 3), (":en", [None] * 3)]),
+            C.StructColumn("ref", [("", ["a", None, "b"])]),
+        ]
+        tile = C.encode_tile([C.LayerData("p", 4096, g, ids=np.arange(3), structs=structs)])
+        la = C.decode_tile(tile)[0]
+        assert la.props == {"name": [], "name:en": [], "ref": ["a", None, "b"]}
+        for fixture_rules in (True, False):
+            assert C.reencode_tile(tile, fixture_rules=fixture_rules) == tile
+        columns = [r["column"] for r in C.inspect_tile(tile)]
+        assert "name" not in columns and "name:en" not in columns
+        assert columns.count("ref") == 4  # shared dictionary + the root child
+
+
+class TestMalformedFrames:
+    """Truncated or padded frames raise ValueError in all three walkers
+    instead of decoding to wrong values or being dropped."""
+
+    WALKERS = (C.decode_tile, C.reencode_tile, C.inspect_tile)
+
+    @staticmethod
+    def _tile() -> bytes:
+        g = _mk_geometry([C.MLT_POINT] * 3, np.random.RandomState(5))
+        words = C.PropColumn("w", "string", ["alpha", "beta", "gamma"], nullable=False)
+        return C.encode_tile([C.LayerData("t", 4096, g, ids=np.arange(3), props=[words])])
+
+    def test_every_truncation_raises(self):
+        tile = self._tile()
+        assert C.decode_tile(tile)[0].props["w"] == ["alpha", "beta", "gamma"]
+        for cut in range(1, len(tile)):
+            for walk in self.WALKERS:
+                with pytest.raises(ValueError):
+                    walk(tile[:cut])
+
+    def test_stray_bytes_after_last_column_raise(self):
+        tile = self._tile()
+        length, pos = K.varint_decode(tile, 1, 0)
+        body = tile[pos:] + b"\x01\x02\x03"
+        padded = K.varint_encode(np.array([len(body)], dtype=np.uint64)) + body
+        for walk in self.WALKERS:
+            with pytest.raises(ValueError, match="column walk"):
+                walk(padded)
+
+    def test_frame_past_tile_end_raises(self):
+        # declares 5 body bytes, 2 follow
+        for walk in self.WALKERS:
+            with pytest.raises(ValueError, match="past the tile end"):
+                walk(b"\x05\x07\x01")
+
+    def test_zero_length_frame_raises(self):
+        # the tag would be read from the next frame's length varint
+        for walk in self.WALKERS:
+            with pytest.raises(ValueError, match="inside its tag"):
+                walk(b"\x00" + self._tile())
+
+
 class TestPretessellated:
     def test_tessellated_layer_roundtrip(self):
         rng = np.random.RandomState(9)
