@@ -522,7 +522,8 @@ class TestInspect:
         # every reference fixture when present (omt tiles carry shared-dict
         # struct columns, the historical over-read regression), and always
         # the synthetic anchor corpus
-        fixtures = sorted(glob.glob("/root/reference/test/expected/tag0x01/**/*.mlt", recursive=True))
+        pattern = os.path.join(os.path.dirname(FIXTURE_DIR), "**", "*.mlt")
+        fixtures = sorted(glob.glob(pattern, recursive=True))
         tiles = [open(f, "rb").read() for f in fixtures] + list(codec_corpus().values())
         for buf in tiles:
             recs = C.inspect_tile(buf)
