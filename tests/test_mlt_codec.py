@@ -13,6 +13,7 @@ import hashlib
 import json
 import math
 import os
+import struct
 
 import numpy as np
 import pytest
@@ -1148,6 +1149,171 @@ def codec_corpus() -> dict[str, bytes]:
     }
 
 
+# a minimal MVT protobuf writer (vector-tile-spec 2.1): layers of features,
+# each feature (id, MVT geometry type, vertex runs, {key: (kind, value)})
+
+
+def _pb_varint(v: int) -> bytes:
+    out = bytearray()
+    while v > 0x7F:
+        out.append(v & 0x7F | 0x80)
+        v >>= 7
+    out.append(v)
+    return bytes(out)
+
+
+def _pb_uint(field: int, v: int) -> bytes:
+    return _pb_varint(field << 3) + _pb_varint(v)
+
+
+def _pb_bytes(field: int, data: bytes) -> bytes:
+    return _pb_varint(field << 3 | 2) + _pb_varint(len(data)) + data
+
+
+def _pb_packed(field: int, values: list[int]) -> bytes:
+    return _pb_bytes(field, b"".join(_pb_varint(v) for v in values))
+
+
+def _zigzag(v: int) -> int:
+    return ((v << 1) ^ (v >> 63)) & 0xFFFFFFFFFFFFFFFF
+
+
+def _mvt_value(kind: str, v) -> bytes:
+    if kind == "string":
+        return _pb_bytes(1, v.encode())
+    if kind == "float":
+        return _pb_varint(2 << 3 | 5) + struct.pack("<f", v)
+    if kind == "double":
+        return _pb_varint(3 << 3 | 1) + struct.pack("<d", v)
+    code = {"int": 4, "uint": 5, "sint": 6, "bool": 7}[kind]
+    return _pb_uint(code, _zigzag(v) if kind == "sint" else int(v) & 0xFFFFFFFFFFFFFFFF)
+
+
+def _mvt_commands(geom_type: int, runs: list) -> list[int]:
+    """MoveTo/LineTo/ClosePath commands with zigzag deltas: one MoveTo over
+    every point of a point feature, else MoveTo + LineTo per run and a
+    ClosePath after each polygon ring (which may repeat its first vertex)."""
+    cmds: list[int] = []
+    cur = (0, 0)
+
+    def params(pts) -> None:
+        nonlocal cur
+        for x, y in pts:
+            cmds.extend((_zigzag(x - cur[0]), _zigzag(y - cur[1])))
+            cur = (x, y)
+
+    if geom_type == 1:
+        pts = [p for run in runs for p in run]
+        cmds.append(1 | len(pts) << 3)
+        params(pts)
+        return cmds
+    for run in runs:
+        cmds.append(1 | 1 << 3)
+        params(run[:1])
+        cmds.append(2 | (len(run) - 1) << 3)
+        params(run[1:])
+        if geom_type == 3:
+            cmds.append(7 | 1 << 3)
+    return cmds
+
+
+def mvt_tile(layers: list) -> bytes:
+    """[(name, extent, [(id, geom_type, runs, props)])] → MVT tile bytes."""
+    out = b""
+    for name, extent, features in layers:
+        keys: dict = {}
+        values: dict = {}
+        body = b""
+        for fid, geom_type, runs, props in features:
+            tags = []
+            for k, kv in props.items():
+                tags += [keys.setdefault(k, len(keys)), values.setdefault(kv, len(values))]
+            feature = (
+                _pb_uint(1, fid)
+                + _pb_packed(2, tags)
+                + _pb_uint(3, geom_type)
+                + _pb_packed(4, _mvt_commands(geom_type, runs))
+            )
+            body += _pb_bytes(2, feature)
+        layer = _pb_uint(15, 2) + _pb_bytes(1, name.encode()) + body
+        layer += b"".join(_pb_bytes(3, k.encode()) for k in keys)
+        layer += b"".join(_pb_bytes(4, _mvt_value(*kv)) for kv in values)
+        out += _pb_bytes(3, layer + _pb_uint(5, extent))
+    return out
+
+
+def mvt_corpus() -> dict[str, bytes]:
+    """Deterministic one-layer MVT tiles for the converter anchors: points
+    and multipoints, a line-only layer, polygons with holes and
+    multipolygons split by winding (rings with and without a repeated
+    closing vertex), and a mixed line + polygon layer."""
+    rng = np.random.RandomState(2025)
+
+    def walk(n: int) -> list:
+        start = rng.randint(300, 3800, 2)
+        return [tuple(p) for p in (start + np.cumsum(rng.randint(-60, 61, (n, 2)), axis=0)).tolist()]
+
+    def box(x0: int, y0: int, x1: int, y1: int, hole: bool = False, closed: bool = False) -> list:
+        """Positive shoelace area (an exterior ring) unless ``hole``."""
+        ring = [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+        ring = ring[::-1] if hole else ring
+        return ring + ring[:1] if closed else ring
+
+    def props(i: int) -> dict:
+        out = {"name": ("string", f"feature_{i % 7}_of_the_layer"), "rank": ("int", i - 5)}
+        if i % 3:
+            out.update(big=("uint", 2**40 + i), w=("double", i / 4), s=("sint", -i))
+        if i % 4:
+            out.update(f=("float", i / 2), ok=("bool", i % 2 == 0))
+        return out
+
+    def points(i: int) -> tuple:
+        if i % 3 == 0:
+            return 1, [[p] for p in walk(int(rng.randint(2, 6)))]
+        return 1, [walk(1)]
+
+    def lines(i: int) -> tuple:
+        return 2, [walk(int(rng.randint(2, 9))) for _ in range(1 if i % 2 else int(rng.randint(2, 4)))]
+
+    def polygons(i: int) -> tuple:
+        x, y = (int(v) for v in rng.randint(0, 3000, 2))
+        closed = i % 2 == 0
+        outer = box(x, y, x + 400, y + 300, closed=closed)
+        if i % 4 == 0:  # exterior only
+            return 3, [outer]
+        if i % 4 == 1:  # two holes
+            return 3, [outer, box(x + 20, y + 20, x + 90, y + 80, hole=True, closed=closed),
+                       box(x + 200, y + 100, x + 260, y + 150, hole=True, closed=not closed)]
+        # multipolygon: a second exterior opens a second polygon
+        second = box(x + 500, y, x + 700, y + 200, closed=not closed)
+        if i % 4 == 2:
+            return 3, [outer, second]
+        return 3, [outer, box(x + 50, y + 50, x + 100, y + 100, hole=True), second,
+                   box(x + 550, y + 50, x + 600, y + 80, hole=True, closed=True)]
+
+    def layer(name: str, makers: list, n: int) -> bytes:
+        features = [(i + 1, *makers[i % len(makers)](i), props(i)) for i in range(n)]
+        return mvt_tile([(name, 4096, features)])
+
+    return {
+        "mvt_points": layer("pois", [points], 24),
+        "mvt_lines": layer("roads", [lines], 24),
+        "mvt_polygons": layer("land", [polygons], 24),
+        "mvt_mixed": layer("mixed", [lines, polygons, lines, polygons, points], 40),
+    }
+
+
+def mvt_digests(mvt: bytes) -> dict:
+    """sha256 and size of the converter's output under each CLI setting."""
+    from maplibre_tile_spec_spark.functions import mlt_cli as CLI
+
+    return {
+        "convert_mvt()": _digest(CLI.convert_mvt(mvt)),
+        "convert_mvt(use_fsst=True)": _digest(CLI.convert_mvt(mvt, use_fsst=True)),
+        "convert_mvt(use_fastpfor=True)": _digest(CLI.convert_mvt(mvt, use_fastpfor=True)),
+    }
+
+
 def _canonical(obj):
     """A value → plain Python structure whose repr pins every decoded value
     and array dtype."""
@@ -1202,9 +1368,33 @@ class TestCodecAnchors:
         got = codec_digests(codec_corpus()[case])
         assert got == want
 
+    @pytest.mark.parametrize("case", sorted(mvt_corpus()))
+    def test_mvt_digests_match_anchor(self, case):
+        with open(CODEC_ANCHORS) as f:
+            want = json.load(f)[case]
+        assert mvt_digests(mvt_corpus()[case]) == want
+
+    def test_mvt_corpus_converts_to_its_features(self):
+        """The MVT writer and the converter agree: every MVT feature comes
+        back from the MLT tile with its id, geometry class and vertex runs
+        (a repeated closing vertex dropped)."""
+        from maplibre_tile_spec_spark.functions import mlt_cli as CLI
+        from maplibre_tile_spec_spark.functions import mvt as M
+
+        for mvt in mvt_corpus().values():
+            want = M.decode_mvt(mvt)[0].features
+            la = C.decode_tile(CLI.convert_mvt(mvt))[0]
+            assert la.ids.tolist() == [f.id for f in want]
+            for f, (t, parts) in zip(want, C.geometry_to_features(la.geometry), strict=True):
+                assert t % 3 + 1 == f.geom_type
+                polygonal = t in (C.MLT_POLYGON, C.MLT_MULTIPOLYGON)
+                got = [r[:-1] if polygonal else r for rings in parts for r in rings]
+                runs = [r[:-1] if polygonal and np.array_equal(r[0], r[-1]) else r for r in f.geometry]
+                assert [r.tolist() for r in got] == [r.tolist() for r in runs]
+
     def test_every_case_is_anchored(self):
         with open(CODEC_ANCHORS) as f:
-            assert sorted(json.load(f)) == sorted(codec_corpus())
+            assert sorted(json.load(f)) == sorted({**codec_corpus(), **mvt_corpus()})
 
     def test_corpus_reaches_every_branch(self):
         corpus = codec_corpus()
@@ -1243,6 +1433,7 @@ class TestCodecAnchors:
 if __name__ == "__main__":
     # regenerate the committed anchors (see TestCodecAnchors)
     anchors = {name: codec_digests(tile) for name, tile in codec_corpus().items()}
+    anchors.update({name: mvt_digests(mvt) for name, mvt in mvt_corpus().items()})
     with open(CODEC_ANCHORS, "w") as f:
         json.dump(anchors, f, indent=1, sort_keys=True)
         f.write("\n")
