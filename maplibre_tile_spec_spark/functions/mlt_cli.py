@@ -95,30 +95,18 @@ def _ring_area(r: np.ndarray) -> float:
 
 
 def _geometry_column(features: list[M.MvtFeature]) -> C.GeometryColumn:
-    """MVT feature runs → the reference's geometry topology model
-    (GeometryEncoder.encodeGeometryColumn:525-612: closing vertices dropped,
-    LINESTRING counts go to num_rings when the column contains polygons)."""
-    types, num_geoms, num_parts, num_rings, verts = [], [], [], [], []
-    contains_poly = any(f.geom_type == 3 for f in features)
+    """MVT feature runs → ``mlt_codec.geometry_column``: a point feature's
+    points become one run each, and polygon rings split into polygons by
+    winding (a positive-area ring opens the next polygon) with a repeated
+    closing vertex dropped."""
+    out = []
     for f in features:
         if f.geom_type == 1:
-            n_pts = sum(r.shape[0] for r in f.geometry)
-            if n_pts == 1:
-                types.append(C.MLT_POINT)
-            else:
-                types.append(C.MLT_MULTIPOINT)
-                num_geoms.append(n_pts)
-            for run in f.geometry:
-                verts.extend(run.ravel().tolist())
+            pts = [run[i : i + 1] for run in f.geometry for i in range(run.shape[0])]
+            out.append((C.MLT_POINT, [pts]) if len(pts) == 1 else (C.MLT_MULTIPOINT, [[p] for p in pts]))
         elif f.geom_type == 2:
-            if len(f.geometry) == 1:
-                types.append(C.MLT_LINESTRING)
-            else:
-                types.append(C.MLT_MULTILINESTRING)
-                num_geoms.append(len(f.geometry))
-            for run in f.geometry:
-                (num_rings if contains_poly else num_parts).append(run.shape[0])
-                verts.extend(run.ravel().tolist())
+            t = C.MLT_LINESTRING if len(f.geometry) == 1 else C.MLT_MULTILINESTRING
+            out.append((t, [[run] for run in f.geometry]))
         elif f.geom_type == 3:
             polys: list[list[np.ndarray]] = []
             for r in f.geometry:
@@ -128,25 +116,10 @@ def _geometry_column(features: list[M.MvtFeature]) -> C.GeometryColumn:
                     polys.append([rr])
                 else:
                     polys[-1].append(rr)
-            if len(polys) == 1:
-                types.append(C.MLT_POLYGON)
-            else:
-                types.append(C.MLT_MULTIPOLYGON)
-                num_geoms.append(len(polys))
-            for p in polys:
-                num_parts.append(len(p))
-                for rr in p:
-                    num_rings.append(rr.shape[0])
-                    verts.extend(rr.ravel().tolist())
+            out.append((C.MLT_POLYGON if len(polys) == 1 else C.MLT_MULTIPOLYGON, polys))
         else:
             raise ValueError(f"unsupported MVT geometry type {f.geom_type}")
-    return C.GeometryColumn(
-        types=np.array(types, dtype=np.int64),
-        num_geometries=np.array(num_geoms, dtype=np.int64),
-        num_parts=np.array(num_parts, dtype=np.int64),
-        num_rings=np.array(num_rings, dtype=np.int64),
-        vertices=np.array(verts, dtype=np.int64),
-    )
+    return C.geometry_column(out)
 
 
 def _prop_values(features: list[M.MvtFeature], name: str, col_type: str) -> list:

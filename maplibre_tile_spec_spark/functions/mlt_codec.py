@@ -108,7 +108,8 @@ class GeometryColumn:
 
     num_parts carries rings-per-polygon when the column contains polygons,
     else vertices-per-linestring; num_rings carries vertices-per-ring
-    (closing vertex dropped, GeometryEncoder.flatPolygon).
+    (closing vertex dropped, GeometryEncoder.flatPolygon). Build one from
+    per-feature vertex runs with ``geometry_column``.
     """
 
     types: np.ndarray  # MLT ordinals, one per feature
@@ -117,6 +118,37 @@ class GeometryColumn:
     num_rings: np.ndarray
     vertices: np.ndarray  # interleaved int32 [x0,y0,x1,y1,...]
     z: np.ndarray | None = None  # per-vertex elevations → GEOMETRY_Z column
+
+
+def geometry_column(features: list[tuple[int, list[list[np.ndarray]]]]) -> GeometryColumn:
+    """Per feature (mlt_type, parts[runs[(n, 2) int array]]) → the SoA
+    topology; the inverse of ``geometry_to_features`` with polygon rings
+    passed open and one one-vertex run per MULTIPOINT point. The one place
+    that applies the reference layout (GeometryEncoder.encodeGeometryColumn:
+    525-612): polygon rings store no closing vertex, and LINESTRING run
+    lengths go to num_rings once the column holds any polygon."""
+    types, num_geoms, num_parts, num_rings = [], [], [], []
+    runs: list[np.ndarray] = []
+    polygonal = (MLT_POLYGON, MLT_MULTIPOLYGON)
+    line_lengths = num_rings if any(t in polygonal for t, _ in features) else num_parts
+    for t, parts in features:
+        types.append(t)
+        if t in (MLT_MULTIPOINT, MLT_MULTILINESTRING, MLT_MULTIPOLYGON):
+            num_geoms.append(len(parts))
+        for part in parts:
+            if t in polygonal:
+                num_parts.append(len(part))
+                num_rings.extend(r.shape[0] for r in part)
+            elif t in (MLT_LINESTRING, MLT_MULTILINESTRING):
+                line_lengths.extend(r.shape[0] for r in part)
+            runs.extend(part)
+    return GeometryColumn(
+        types=np.array(types, dtype=np.int64),
+        num_geometries=np.array(num_geoms, dtype=np.int64),
+        num_parts=np.array(num_parts, dtype=np.int64),
+        num_rings=np.array(num_rings, dtype=np.int64),
+        vertices=np.concatenate(runs).astype(np.int64, copy=False).ravel() if runs else np.empty(0, np.int64),
+    )
 
 
 @dataclass
@@ -408,58 +440,19 @@ def encode_geometry_column_pretessellated(g: GeometryColumn) -> tuple[int, bytes
     if xs.shape[0] == 0:
         raise ValueError("geometry column contains no vertices")
 
-    # walk features to tessellate polygons
     n_tris: list[int] = []
     index_buffer: list[int] = []
-    vi = gi = pi = ri = 0
-    contains_poly = bool(np.isin(g.types, (MLT_POLYGON, MLT_MULTIPOLYGON)).any())
-    vb = np.column_stack([xs, ys]).astype(float)
-
-    def rings_of(nr: int):
-        nonlocal vi, ri
-        rings = []
-        for _ in range(nr):
-            n = int(g.num_rings[ri]); ri += 1
-            rings.append(vb[vi : vi + n])
-            vi += n
-        return rings
-
-    for t in g.types.tolist():
-        if t == MLT_POINT:
-            vi += 1
-        elif t == MLT_MULTIPOINT:
-            vi += int(g.num_geometries[gi]); gi += 1
-        elif t == MLT_LINESTRING:
-            if contains_poly:
-                vi += int(g.num_rings[ri]); ri += 1
-            else:
-                vi += int(g.num_parts[pi]); pi += 1
-        elif t == MLT_MULTILINESTRING:
-            nl = int(g.num_geometries[gi]); gi += 1
-            for _ in range(nl):
-                if contains_poly:
-                    vi += int(g.num_rings[ri]); ri += 1
-                else:
-                    vi += int(g.num_parts[pi]); pi += 1
-        elif t == MLT_POLYGON:
-            nr = int(g.num_parts[pi]); pi += 1
-            start = vi
-            tris = TS.triangulate(rings_of(nr))
-            n_tris.append(tris.shape[0])
-            index_buffer.extend((tris.ravel()).tolist())
-            _ = start
-        else:  # MULTIPOLYGON
-            npoly = int(g.num_geometries[gi]); gi += 1
-            total = 0
-            base = 0
-            for _ in range(npoly):
-                nr = int(g.num_parts[pi]); pi += 1
-                start_vi = vi
-                tris = TS.triangulate(rings_of(nr))
-                total += tris.shape[0]
-                index_buffer.extend((tris.ravel() + base).tolist())
-                base += vi - start_vi
-            n_tris.append(total)
+    for t, parts in geometry_to_features(g):
+        if t not in (MLT_POLYGON, MLT_MULTIPOLYGON):
+            continue
+        total = base = 0
+        for rings in parts:
+            rings = [r[:-1].astype(float) for r in rings]  # reopen
+            tris = TS.triangulate(rings)
+            total += tris.shape[0]
+            index_buffer.extend((tris.ravel() + base).tolist())
+            base += sum(r.shape[0] for r in rings)
+        n_tris.append(total)
 
     out = _int_stream(g.types.astype(np.int64), False, K.PST_LENGTH, 0)
     out += _int_stream(np.asarray(g.num_geometries, dtype=np.int64), False, K.PST_LENGTH, LT_GEOMETRIES)
@@ -1383,64 +1376,38 @@ def _decode_geometry_column(buf: bytes, pos: int, n_streams: int):
 
 def geometry_to_features(g: GeometryColumn) -> list[tuple[int, list[list[np.ndarray]]]]:
     """Topology walk (GeometryDecoder.decodeGeometry): per feature →
-    (mlt_type, parts[rings[vertex array (n,2), closed for polygons]])."""
-    contains_polygon = bool(np.isin(g.types, (MLT_POLYGON, MLT_MULTIPOLYGON)).any())
+    (mlt_type, parts[rings[vertex array (n,2), closed for polygons]]).
+    Raises ``ValueError`` unless the walk consumes every vertex and count."""
     vb = g.vertices.reshape(-1, 2)
     vi = 0  # vertex cursor
-    gi = pi = ri = 0  # num_geometries / num_parts / num_rings cursors
-    out = []
 
     def take(n: int) -> np.ndarray:
         nonlocal vi
-        v = vb[vi : vi + n]
         vi += n
-        return v
+        return vb[vi - n : vi]
 
-    def close(ring: np.ndarray) -> np.ndarray:
+    def closed_ring(n: int) -> np.ndarray:
+        ring = take(n)
         return np.vstack([ring, ring[:1]])
 
-    for t in g.types.tolist():
-        if t == MLT_POINT:
-            out.append((t, [[take(1)]]))
-        elif t == MLT_MULTIPOINT:
-            n = int(g.num_geometries[gi]); gi += 1
-            out.append((t, [[take(1)] for _ in range(n)]))
-        elif t == MLT_LINESTRING:
-            if contains_polygon:
-                n = int(g.num_rings[ri]); ri += 1
+    geoms, parts, rings = (iter(a.tolist()) for a in (g.num_geometries, g.num_parts, g.num_rings))
+    line_lengths = rings if np.isin(g.types, (MLT_POLYGON, MLT_MULTIPOLYGON)).any() else parts
+    out = []
+    try:
+        for t in g.types.tolist():
+            n = next(geoms) if t in (MLT_MULTIPOINT, MLT_MULTILINESTRING, MLT_MULTIPOLYGON) else 1
+            if t in (MLT_POINT, MLT_MULTIPOINT):
+                out.append((t, [[take(1)] for _ in range(n)]))
+            elif t in (MLT_LINESTRING, MLT_MULTILINESTRING):
+                out.append((t, [[take(next(line_lengths))] for _ in range(n)]))
+            elif t in (MLT_POLYGON, MLT_MULTIPOLYGON):
+                out.append((t, [[closed_ring(next(rings)) for _ in range(next(parts))] for _ in range(n)]))
             else:
-                n = int(g.num_parts[pi]); pi += 1
-            out.append((t, [[take(n)]]))
-        elif t == MLT_MULTILINESTRING:
-            nl = int(g.num_geometries[gi]); gi += 1
-            parts = []
-            for _ in range(nl):
-                if contains_polygon:
-                    n = int(g.num_rings[ri]); ri += 1
-                else:
-                    n = int(g.num_parts[pi]); pi += 1
-                parts.append([take(n)])
-            out.append((t, parts))
-        elif t == MLT_POLYGON:
-            nr = int(g.num_parts[pi]); pi += 1
-            rings = []
-            for _ in range(nr):
-                n = int(g.num_rings[ri]); ri += 1
-                rings.append(close(take(n)))
-            out.append((t, [rings]))
-        elif t == MLT_MULTIPOLYGON:
-            np_ = int(g.num_geometries[gi]); gi += 1
-            parts = []
-            for _ in range(np_):
-                nr = int(g.num_parts[pi]); pi += 1
-                rings = []
-                for _ in range(nr):
-                    n = int(g.num_rings[ri]); ri += 1
-                    rings.append(close(take(n)))
-                parts.append(rings)
-            out.append((t, parts))
-        else:
-            raise ValueError(f"unknown geometry type {t}")
+                raise ValueError(f"unknown geometry type {t}")
+    except StopIteration:
+        raise ValueError("geometry topology walk ran past the end of a count stream") from None
+    if vi != vb.shape[0] or any(next(it, None) is not None for it in (geoms, parts, rings)):
+        raise ValueError("geometry topology walk left vertices or counts unconsumed")
     return out
 
 

@@ -42,6 +42,22 @@ from maplibre_tile_spec_spark.functions import wkt as W
 TILE_SCHEMA = "x int, y int, n_features long, n_vertices long, part binary"
 
 
+def _wkt_runs(gt: int, q: np.ndarray, structure: list[list[int]]) -> list[list[np.ndarray]]:
+    """Split a parsed WKT's (n, 2) coordinates into ``parts[runs]``, the
+    per-feature form ``mlt_codec.geometry_column`` takes: each polygon ring
+    loses its closing vertex, each MULTIPOINT point is its own part."""
+    polygonal = gt in (W.GT_POLYGON, W.GT_MULTIPOLYGON)
+    parts, ci = [], 0
+    for part in structure:
+        runs = []
+        for n in part:
+            run = q[ci : ci + n]
+            runs.append(run[:-1] if polygonal else run)
+            ci += n
+        parts.append(runs)
+    return parts
+
+
 def _features_to_geometry_column(
     wkts: list[str], tile_x: int, tile_y: int, zoom: int, extent: int
 ) -> tuple[C.GeometryColumn, np.ndarray]:
@@ -62,61 +78,13 @@ def _features_to_geometry_column(
     aqx, aqy = TM.np_quantize_to_extent(all_coords[:, 0], all_coords[:, 1], tile_x, tile_y, zoom, extent)
     # sort by hilbert index of the quantized first vertex (reference sort)
     order = np.argsort(K.hilbert_encode(aqx[starts], aqy[starts], order=12), kind="stable")
-
-    types, num_geoms, num_parts, num_rings = [], [], [], []
-    vert_chunks: list[np.ndarray] = []
-    contains_poly = any(p[0] in (W.GT_POLYGON, W.GT_MULTIPOLYGON) for p in parsed)
+    q = np.column_stack([aqx, aqy])
+    features = []
     for i in order:
-        gt, coords, structure = parsed[i]
-        base = starts[i]
-        cqx = aqx[base : base + counts[i]]
-        cqy = aqy[base : base + counts[i]]
-        types.append(gt - 1)  # WKT codes 1-6 → MLT ordinals 0-5
-        ci = 0
-
-        def push(n: int, drop_close: bool) -> None:
-            nonlocal ci
-            take = n - 1 if (drop_close and n > 1) else n
-            chunk = np.empty(take * 2, dtype=np.int64)
-            chunk[0::2] = cqx[ci : ci + take]
-            chunk[1::2] = cqy[ci : ci + take]
-            vert_chunks.append(chunk)
-            ci += n
-
-        if gt == W.GT_POINT:
-            push(1, False)
-        elif gt == W.GT_MULTIPOINT:
-            num_geoms.append(coords.shape[0])
-            push(coords.shape[0], False)
-        elif gt == W.GT_LINESTRING:
-            n = structure[0][0]
-            (num_rings if contains_poly else num_parts).append(n)
-            push(n, False)
-        elif gt == W.GT_MULTILINESTRING:
-            num_geoms.append(len(structure))
-            for part in structure:
-                (num_rings if contains_poly else num_parts).append(part[0])
-                push(part[0], False)
-        elif gt == W.GT_POLYGON:
-            num_parts.append(len(structure[0]))
-            for n in structure[0]:
-                num_rings.append(n - 1)  # closing vertex dropped (GeometryEncoder.java:887-890)
-                push(n, True)
-        else:  # MULTIPOLYGON
-            num_geoms.append(len(structure))
-            for part in structure:
-                num_parts.append(len(part))
-                for n in part:
-                    num_rings.append(n - 1)
-                    push(n, True)
-    g = C.GeometryColumn(
-        types=np.array(types, dtype=np.int64),
-        num_geometries=np.array(num_geoms, dtype=np.int64),
-        num_parts=np.array(num_parts, dtype=np.int64),
-        num_rings=np.array(num_rings, dtype=np.int64),
-        vertices=np.concatenate(vert_chunks) if vert_chunks else np.empty(0, np.int64),
-    )
-    return g, order
+        gt, _, structure = parsed[i]
+        # WKT codes 1-6 → MLT ordinals 0-5
+        features.append((gt - 1, _wkt_runs(gt, q[starts[i] : starts[i] + counts[i]], structure)))
+    return C.geometry_column(features), order
 
 
 def _points_to_geometry_column(
@@ -147,8 +115,6 @@ def _points_to_geometry_column(
     )
     return g, order
 
-
-GEOM_LAYERS = {1: "poi", 2: "road", 3: "land", 4: "poi", 5: "road", 6: "land"}
 
 # auto-salt: target features per encode group. A group at this size encodes
 # in ~O(100 ms); tiles above it fan out into ceil(cnt/target) parts (capped)
@@ -417,94 +383,43 @@ def encode_tiles_clipped(
     lo, hi = float(-buffer), float(extent + buffer)
 
     def encode_group(x, y, pdf):
-        types, num_geoms, num_parts, num_rings = [], [], [], []
-        vert_chunks: list[np.ndarray] = []
-        n_feat = 0
-        parsed = [W.parse_wkt(w) for w in pdf["wkt"]]
-        contains_poly = any(p[0] in (W.GT_POLYGON, W.GT_MULTIPOLYGON) for p in parsed)
+        def floor(pts: np.ndarray) -> np.ndarray:
+            return np.floor(pts).astype(np.int64)
 
-        def push(pts: np.ndarray) -> None:
-            chunk = np.empty(pts.shape[0] * 2, dtype=np.int64)
-            chunk[0::2] = np.floor(pts[:, 0]).astype(np.int64)
-            chunk[1::2] = np.floor(pts[:, 1]).astype(np.int64)
-            vert_chunks.append(chunk)
-
-        for gt, coords, structure in parsed:
+        features = []
+        for gt, coords, structure in (W.parse_wkt(w) for w in pdf["wkt"]):
             q = np.column_stack(TM.np_extent_coords(coords[:, 0], coords[:, 1], x, y, zoom, extent))
             if gt in (W.GT_POINT, W.GT_MULTIPOINT):
-                keep = q[(q[:, 0] >= lo) & (q[:, 0] <= hi) & (q[:, 1] >= lo) & (q[:, 1] <= hi)]
-                if keep.shape[0] == 0:
-                    continue
+                keep = floor(q[(q[:, 0] >= lo) & (q[:, 0] <= hi) & (q[:, 1] >= lo) & (q[:, 1] <= hi)])
                 if keep.shape[0] == 1:
-                    types.append(C.MLT_POINT)
-                else:
-                    types.append(C.MLT_MULTIPOINT)
-                    num_geoms.append(keep.shape[0])
-                push(keep)
-                n_feat += 1
+                    features.append((C.MLT_POINT, [[keep]]))
+                elif keep.shape[0] > 1:
+                    features.append((C.MLT_MULTIPOINT, [[keep[i : i + 1]] for i in range(keep.shape[0])]))
             elif gt in (W.GT_LINESTRING, W.GT_MULTILINESTRING):
-                ci = 0
-                parts_out: list[np.ndarray] = []
-                for part in structure:
-                    n = part[0]
-                    parts_out.extend(CL.clip_line(q[ci : ci + n], lo, lo, hi, hi))
-                    ci += n
-                parts_out = [p for p in parts_out if p.shape[0] >= 2]
-                if not parts_out:
-                    continue
-                if len(parts_out) == 1:
-                    types.append(C.MLT_LINESTRING)
-                    (num_rings if contains_poly else num_parts).append(parts_out[0].shape[0])
-                    push(parts_out[0])
-                else:
-                    types.append(C.MLT_MULTILINESTRING)
-                    num_geoms.append(len(parts_out))
-                    for p in parts_out:
-                        (num_rings if contains_poly else num_parts).append(p.shape[0])
-                        push(p)
-                n_feat += 1
+                lines = [
+                    floor(p)
+                    for (run,) in _wkt_runs(gt, q, structure)
+                    for p in CL.clip_line(run, lo, lo, hi, hi)
+                    if p.shape[0] >= 2
+                ]
+                if lines:
+                    t = C.MLT_LINESTRING if len(lines) == 1 else C.MLT_MULTILINESTRING
+                    features.append((t, [[p] for p in lines]))
             else:  # polygon / multipolygon
-                ci = 0
-                polys_out: list[list[np.ndarray]] = []
-                for part in structure:
-                    rings_out = []
-                    for j, n in enumerate(part):
-                        ring = q[ci : ci + n - 1] if n > 1 else q[ci : ci + n]  # drop closing
-                        ci += n
-                        clipped = CL.clip_ring(ring, lo, lo, hi, hi)
-                        if clipped.shape[0] >= 3:
-                            rings_out.append(clipped)
-                        elif j == 0:
-                            rings_out = []
-                            break  # outer ring gone ⇒ whole part gone
-                    if rings_out:
-                        polys_out.append(rings_out)
-                if not polys_out:
-                    continue
-                if len(polys_out) == 1:
-                    types.append(C.MLT_POLYGON)
-                else:
-                    types.append(C.MLT_MULTIPOLYGON)
-                    num_geoms.append(len(polys_out))
-                for rings in polys_out:
-                    num_parts.append(len(rings))
-                    for r in rings:
-                        num_rings.append(r.shape[0])
-                        push(r)
-                n_feat += 1
-        if n_feat == 0:
+                polys = []
+                for rings in _wkt_runs(gt, q, structure):
+                    clipped = [CL.clip_ring(r, lo, lo, hi, hi) for r in rings]
+                    if clipped and clipped[0].shape[0] >= 3:  # outer ring gone ⇒ whole part gone
+                        polys.append([floor(r) for r in clipped if r.shape[0] >= 3])
+                if polys:
+                    features.append((C.MLT_POLYGON if len(polys) == 1 else C.MLT_MULTIPOLYGON, polys))
+        if not features:
             return None
-        g = C.GeometryColumn(
-            types=np.array(types, dtype=np.int64),
-            num_geometries=np.array(num_geoms, dtype=np.int64),
-            num_parts=np.array(num_parts, dtype=np.int64),
-            num_rings=np.array(num_rings, dtype=np.int64),
-            vertices=np.concatenate(vert_chunks),
-        )
+        g = C.geometry_column(features)
         part = C.encode_layer(
-            C.LayerData(name=layer_name, extent=extent, geometry=g, ids=np.arange(n_feat, dtype=np.int64))
+            C.LayerData(name=layer_name, extent=extent, geometry=g, ids=np.arange(len(features), dtype=np.int64))
         )
-        return (x, y, n_feat, g.vertices.shape[0] // 2, part)
+        return (x, y, len(features), g.vertices.shape[0] // 2, part)
 
     return _assemble_tiles(tiled, zoom, n_salt, salt_target, ("doc_id", "span_offset"), encode_group)
 
@@ -516,33 +431,23 @@ def build_parent_tiles(tiles: DataFrame, extent: int = 4096) -> DataFrame:
     hypertable rollup: a single shuffle on the parent key, Arrow kernels do
     the geometry work. Apply iteratively for a full overview pyramid."""
 
+    polygonal = (C.MLT_POLYGON, C.MLT_MULTIPOLYGON)
+
     def merge_group(key, pdf):
         pz, px, py = int(key[0]), int(key[1]), int(key[2])
         per_layer: dict[str, list] = {}
         for cx, cy, blob in zip(pdf["x"], pdf["y"], pdf["tile"]):
-            cx, cy = int(cx), int(cy)
-            ox = (cx & 1) * extent // 2
-            oy = (cy & 1) * extent // 2
+            offset = np.array([(int(cx) & 1) * extent // 2, (int(cy) & 1) * extent // 2])
             for la in C.decode_tile(bytes(blob)):
-                g = la.geometry
-                v = g.vertices.copy()
-                v[0::2] = v[0::2] // 2 + ox
-                v[1::2] = v[1::2] // 2 + oy
-                per_layer.setdefault(la.name, []).append(
-                    C.GeometryColumn(g.types, g.num_geometries, g.num_parts, g.num_rings, v)
+                per_layer.setdefault(la.name, []).extend(
+                    (t, [[(r[:-1] if t in polygonal else r) // 2 + offset for r in rings] for rings in parts])
+                    for t, parts in C.geometry_to_features(la.geometry)
                 )
         parts = b""
         n_feat = 0
         n_vert = 0
         for lname in sorted(per_layer):
-            gs = per_layer[lname]
-            merged = C.GeometryColumn(
-                types=np.concatenate([g.types for g in gs]),
-                num_geometries=np.concatenate([g.num_geometries for g in gs]),
-                num_parts=np.concatenate([g.num_parts for g in gs]),
-                num_rings=np.concatenate([g.num_rings for g in gs]),
-                vertices=np.concatenate([g.vertices for g in gs]),
-            )
+            merged = C.geometry_column(per_layer[lname])
             n = merged.types.shape[0]
             parts += C.encode_layer(
                 C.LayerData(lname, extent, merged, ids=np.arange(n, dtype=np.int64))

@@ -242,6 +242,39 @@ class TestSelfRoundtrip:
         assert C.fsst_decode(table, lengths, compressed) == b"hello_!"
 
 
+class TestGeometryTopology:
+    @given(st.lists(st.integers(0, 5), min_size=1, max_size=20), st.integers(0, 10**6))
+    @settings(max_examples=60, deadline=None)
+    def test_geometry_column_inverts_geometry_to_features(self, kinds, seed):
+        g = _mk_geometry(kinds, np.random.RandomState(seed % 2**31))
+        polygonal = (C.MLT_POLYGON, C.MLT_MULTIPOLYGON)
+        features = [
+            (t, [[r[:-1] if t in polygonal else r for r in rings] for rings in parts])
+            for t, parts in C.geometry_to_features(g)
+        ]
+        rebuilt = C.geometry_column(features)
+        for name in ("types", "num_geometries", "num_parts", "num_rings", "vertices"):
+            got, want = getattr(rebuilt, name), getattr(g, name)
+            assert got.dtype == np.int64 and np.array_equal(got, want), name
+
+    @pytest.mark.parametrize("extra", ["vertices", "num_geometries", "num_parts", "num_rings"])
+    def test_walk_rejects_unconsumed_topology(self, extra):
+        """A vertex or count the walk does not consume raises instead of
+        being dropped."""
+        g = _mk_geometry([C.MLT_POLYGON, C.MLT_MULTIPOINT, C.MLT_LINESTRING], np.random.RandomState(3))
+        assert len(C.geometry_to_features(g)) == 3
+        arr = getattr(g, extra)
+        setattr(g, extra, np.concatenate([arr, [2] * (2 if extra == "vertices" else 1)]))
+        with pytest.raises(ValueError, match="topology"):
+            C.geometry_to_features(g)
+
+    def test_walk_rejects_trailing_point_vertices(self):
+        empty = np.empty(0, np.int64)
+        g = C.GeometryColumn(np.array([C.MLT_POINT]), empty, empty, empty, np.array([1, 2, 3, 4]))
+        with pytest.raises(ValueError, match="topology"):
+            C.geometry_to_features(g)
+
+
 class TestSharedDictStruct:
     def test_roundtrip(self):
         rng = np.random.RandomState(3)

@@ -263,6 +263,46 @@ class TestPyramidRollup:
             v = la.geometry.vertices
             assert v.min() >= 0 and v.max() < 4096
 
+    def test_line_child_and_polygon_child_merge(self, spark):
+        """A line-only child next to a polygon child: the parent column
+        holds polygons, so its LINESTRING run lengths must move to
+        num_rings, and every feature reads back halved and offset."""
+        empty = np.empty(0, np.int64)
+        lines = C.GeometryColumn(
+            types=np.array([C.MLT_LINESTRING, C.MLT_MULTILINESTRING]),
+            num_geometries=np.array([2]),
+            num_parts=np.array([3, 2, 2]),
+            num_rings=empty,
+            vertices=np.arange(14) * 37 % 4096,
+        )
+        polygon = C.GeometryColumn(
+            types=np.array([C.MLT_POLYGON]),
+            num_geometries=empty,
+            num_parts=np.array([2]),
+            num_rings=np.array([4, 3]),
+            vertices=np.array([0, 0, 4000, 0, 4000, 4000, 0, 4000, 100, 100, 900, 101, 500, 703]),
+        )
+        children = [(1, 0, 1, lines), (1, 1, 1, polygon)]
+        rows = [
+            (z, x, y, bytearray(C.encode_tile([C.LayerData("features", 4096, g, ids=np.arange(len(g.types)))])))
+            for z, x, y, g in children
+        ]
+        tiles = spark.createDataFrame(rows, "z int, x int, y int, tile binary")
+        parent = tiler.build_parent_tiles(tiles).collect()
+        assert [(r.z, r.x, r.y, r.n_features) for r in parent] == [(0, 0, 0, 3)]
+
+        def canonical(t, parts):
+            return (t, [[r.tolist() for r in rings] for rings in parts])
+
+        want = [
+            canonical(t, [[r // 2 + [(x & 1) * 2048, (y & 1) * 2048] for r in rings] for rings in parts])
+            for _, x, y, g in children
+            for t, parts in C.geometry_to_features(g)
+        ]
+        (la,) = C.decode_tile(bytes(parent[0].tile))
+        got = [canonical(t, parts) for t, parts in C.geometry_to_features(la.geometry)]
+        assert sorted(got, key=repr) == sorted(want, key=repr)
+
 
 class TestTranscode:
     def test_transcode_own_tiles_byte_exact(self, spark):
