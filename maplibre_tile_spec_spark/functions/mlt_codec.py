@@ -830,7 +830,7 @@ class DecodedLayer:
     props: dict[str, list]
     triangles: np.ndarray | None = None
     index_buffer: np.ndarray | None = None
-    # logical type per property where one applies (date/timestamp/json)
+    # logical type per decoded property where one applies (date/timestamp/json)
     prop_types: dict[str, str] = field(default_factory=dict)
 
 
@@ -917,8 +917,8 @@ def decode_tile(
                 props.update((cname + suffix, values) for suffix, values in col.children)
             elif col is not None:
                 props[cname] = col.values
-            if tc & ~1 in _CODE_TO_LOGICAL:  # named even when projected away
-                prop_types[cname] = _CODE_TO_LOGICAL[tc & ~1]
+                if tc & ~1 in _CODE_TO_LOGICAL:
+                    prop_types[cname] = _CODE_TO_LOGICAL[tc & ~1]
         out.append(DecodedLayer(name, extent, ids, geometry, props, triangles, index_buffer, prop_types))
     return out
 

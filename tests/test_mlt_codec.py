@@ -878,6 +878,9 @@ class TestLogicalScalarTypes:
         assert out.props["ts"] == [1700000000000, 0, None]
         assert out.props["j"] == ['{"a":1}', None, "[]"]
         assert out.prop_types == {"d": "date", "ts": "timestamp", "j": "json"}
+        # a projected decode types only the columns it decoded
+        pruned = C.decode_tile(C.encode_layer(la), columns={"ts"})[0]
+        assert set(pruned.props) == {"ts"} and pruned.prop_types == {"ts": "timestamp"}
 
     def test_transcode_preserves_logical_bytes(self):
         la = self._layer([
