@@ -447,7 +447,7 @@ def encode_geometry_column_pretessellated(g: GeometryColumn) -> tuple[int, bytes
             continue
         total = base = 0
         for rings in parts:
-            rings = [r[:-1].astype(float) for r in rings]  # reopen
+            rings = [r[:-1].astype(float) for r in rings]  # triangulate takes open rings
             tris = TS.triangulate(rings)
             total += tris.shape[0]
             index_buffer.extend((tris.ravel() + base).tolist())
@@ -1388,7 +1388,7 @@ def geometry_to_features(g: GeometryColumn) -> list[tuple[int, list[list[np.ndar
 
     def closed_ring(n: int) -> np.ndarray:
         ring = take(n)
-        return np.vstack([ring, ring[:1]])
+        return np.concatenate((ring, ring[:1]))
 
     geoms, parts, rings = (iter(a.tolist()) for a in (g.num_geometries, g.num_parts, g.num_rings))
     line_lengths = rings if np.isin(g.types, (MLT_POLYGON, MLT_MULTIPOLYGON)).any() else parts

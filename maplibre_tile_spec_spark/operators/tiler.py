@@ -439,9 +439,12 @@ def build_parent_tiles(tiles: DataFrame, extent: int = 4096) -> DataFrame:
         for cx, cy, blob in zip(pdf["x"], pdf["y"], pdf["tile"]):
             offset = np.array([(int(cx) & 1) * extent // 2, (int(cy) & 1) * extent // 2])
             for la in C.decode_tile(bytes(blob)):
+                g = la.geometry
+                v = (g.vertices.reshape(-1, 2) // 2 + offset).ravel()
+                halved = C.GeometryColumn(g.types, g.num_geometries, g.num_parts, g.num_rings, v)
                 per_layer.setdefault(la.name, []).extend(
-                    (t, [[(r[:-1] if t in polygonal else r) // 2 + offset for r in rings] for rings in parts])
-                    for t, parts in C.geometry_to_features(la.geometry)
+                    (t, [[r[:-1] for r in rings] for rings in parts] if t in polygonal else parts)
+                    for t, parts in C.geometry_to_features(halved)
                 )
         parts = b""
         n_feat = 0

@@ -257,20 +257,15 @@ class TestGeometryTopology:
             got, want = getattr(rebuilt, name), getattr(g, name)
             assert got.dtype == np.int64 and np.array_equal(got, want), name
 
-    @pytest.mark.parametrize("extra", ["vertices", "num_geometries", "num_parts", "num_rings"])
-    def test_walk_rejects_unconsumed_topology(self, extra):
-        """A vertex or count the walk does not consume raises instead of
-        being dropped."""
+    @pytest.mark.parametrize("stream", ["vertices", "num_geometries", "num_parts", "num_rings"])
+    @pytest.mark.parametrize("change", ["append", "drop"])
+    def test_walk_rejects_topology_it_does_not_consume(self, stream, change):
+        """A trailing vertex or count raises instead of being dropped, and
+        a missing one raises ValueError instead of an IndexError."""
         g = _mk_geometry([C.MLT_POLYGON, C.MLT_MULTIPOINT, C.MLT_LINESTRING], np.random.RandomState(3))
         assert len(C.geometry_to_features(g)) == 3
-        arr = getattr(g, extra)
-        setattr(g, extra, np.concatenate([arr, [2] * (2 if extra == "vertices" else 1)]))
-        with pytest.raises(ValueError, match="topology"):
-            C.geometry_to_features(g)
-
-    def test_walk_rejects_trailing_point_vertices(self):
-        empty = np.empty(0, np.int64)
-        g = C.GeometryColumn(np.array([C.MLT_POINT]), empty, empty, empty, np.array([1, 2, 3, 4]))
+        arr, k = getattr(g, stream), 2 if stream == "vertices" else 1
+        setattr(g, stream, np.concatenate([arr, [2] * k]) if change == "append" else arr[:-k])
         with pytest.raises(ValueError, match="topology"):
             C.geometry_to_features(g)
 
