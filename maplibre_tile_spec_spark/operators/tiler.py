@@ -442,6 +442,7 @@ def build_parent_tiles(tiles: DataFrame, extent: int = 4096) -> DataFrame:
                 g = la.geometry
                 v = (g.vertices.reshape(-1, 2) // 2 + offset).ravel()
                 halved = C.GeometryColumn(g.types, g.num_geometries, g.num_parts, g.num_rings, v)
+                # geometry_to_features closes rings; geometry_column takes them open
                 per_layer.setdefault(la.name, []).extend(
                     (t, [[r[:-1] for r in rings] for rings in parts] if t in polygonal else parts)
                     for t, parts in C.geometry_to_features(halved)
