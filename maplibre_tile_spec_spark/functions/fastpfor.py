@@ -193,6 +193,8 @@ def _decode_page(words, pos: int, thissize: int, out: np.ndarray, outpos: int) -
     for k in range(2, 33):
         if bitmap & (1 << (k - 1)):
             size = int(words[inexcept])
+            if size > thissize:
+                raise ValueError(f"FastPFOR page of {thissize} values lists {size} exceptions")
             inexcept += 1
             # tight layout: ceil(size·k/32) words; re-pad locally so the
             # 32-lane unpacker can run on the final partial group
@@ -272,6 +274,8 @@ def _vbyte_decode(words, pos: int, end: int, out: np.ndarray, outpos: int) -> in
             p += 1
         v += (c & 127) << shift
         if c & 128:
+            if outpos >= out.shape[0] or v > 0xFFFFFFFF:
+                raise ValueError("VariableByte value past the stream's count or 32 bits")
             out[outpos] = v
             outpos += 1
             v = 0
@@ -307,6 +311,8 @@ def fastpfor_encode(values: np.ndarray) -> bytes:
 def fastpfor_decode(buf: bytes, offset: int, num_values: int, byte_length: int) -> np.ndarray:
     """Reference byte stream → uint32 values (VectorizedDecodingUtils
     semantics: byteLength bytes from offset, big-endian words)."""
+    if num_values > 128 * byte_length:  # 256-value blocks cost >= 2 bytes each
+        raise ValueError(f"{byte_length} FastPFOR bytes cannot hold {num_values} values")
     nwords = (byte_length + 3) // 4
     words = np.frombuffer(buf, dtype=">u4", count=nwords, offset=offset).astype(np.uint64)
     out = np.zeros(num_values, dtype=np.uint32)
@@ -316,6 +322,8 @@ def fastpfor_decode(buf: bytes, offset: int, num_values: int, byte_length: int) 
         # FastPFOR.uncompress always consumes the head word (its claimed
         # multiple-of-256 value count, possibly zero)
         claimed = int(words[0])
+        if claimed > num_values:
+            raise ValueError(f"FastPFOR head claims {claimed} of {num_values} values")
         pos = 1
         remaining = claimed
         while remaining > 0:

@@ -150,6 +150,8 @@ def varint_decode(buf: bytes | np.ndarray, count: int, offset: int = 0) -> tuple
                     # match the vectorized path's failure surface: a run of
                     # 0x80 continuation bytes must fail loudly, not overflow
                     raise ValueError("varint too long (more than 10 bytes)")
+            if v >> 64:
+                raise ValueError("varint wider than 64 bits")
             out[i] = v
         return out, p
     data = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
@@ -266,21 +268,29 @@ def byte_rle_encode(data: np.ndarray | bytes) -> bytes:
 
 
 def byte_rle_decode(buf: bytes, num_bytes: int, offset: int = 0) -> tuple[np.ndarray, int]:
-    out = np.empty(num_bytes, dtype=np.uint8)
+    """ORC byte-RLE → ``num_bytes`` bytes. A two-byte run expands to at most
+    130 bytes, so a count the buffer cannot hold raises ``ValueError``
+    before anything is allocated, as does a run cut off by the buffer end."""
     data = np.frombuffer(buf, dtype=np.uint8)
+    end = data.shape[0]
+    if num_bytes > 65 * (end - offset):
+        raise ValueError(f"{end - offset} byte-RLE bytes cannot expand to {num_bytes}")
+    out = np.empty(num_bytes, dtype=np.uint8)
     pos = offset
     filled = 0
     while filled < num_bytes:
+        if pos >= end:
+            raise ValueError("byte-RLE stream ends before its count")
         control = int(data[pos])
         pos += 1
-        if control < 0x80:
-            n = control + 3
-            out[filled : filled + n] = data[pos]
-            pos += 1
-        else:
-            n = 256 - control
-            out[filled : filled + n] = data[pos : pos + n]
-            pos += n
+        if control < 0x80:  # one value repeated control + 3 times
+            n, width = control + 3, 1
+        else:  # 256 - control literal values
+            n = width = 256 - control
+        if pos + width > end:
+            raise ValueError("byte-RLE stream ends inside a run")
+        out[filled : filled + n] = data[pos : pos + width]
+        pos += width
         filled += n
     return out, pos
 
@@ -293,7 +303,7 @@ def boolean_rle_encode(bits: np.ndarray) -> bytes:
 
 def boolean_rle_decode(buf: bytes, num_values: int, byte_length: int, offset: int = 0) -> tuple[np.ndarray, int]:
     num_bytes = (num_values + 7) // 8
-    packed, _ = byte_rle_decode(buf, num_bytes, offset)
+    packed, _ = byte_rle_decode(memoryview(buf)[: offset + byte_length], num_bytes, offset)
     bits = np.unpackbits(packed, bitorder="little")[:num_values]
     return bits.astype(bool), offset + byte_length
 
@@ -427,6 +437,9 @@ def decode_int_stream(
     else:
         raw, _ = varint_decode(buf, num_values, offset)
     end = offset + byte_length
+    if LLT_RLE in (llt1, llt2) and int(raw[:num_runs_meta].sum()) != num_rle_values:
+        # checked before expanding, so a corrupt run length cannot allocate
+        raise ValueError(f"RLE runs do not add up to the {num_rle_values} values in the metadata")
     if llt1 == LLT_RLE:
         runs = raw[:num_runs_meta].astype(np.int64)
         vals = raw[num_runs_meta:]

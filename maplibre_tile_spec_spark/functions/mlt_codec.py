@@ -25,9 +25,9 @@ index streams, re-encode recomputes them with earcut), BOOLEAN,
 INT_32/UINT_32/INT_64/UINT_64, FLOAT/DOUBLE, STRING (plain / dictionary /
 FSST dictionary) and shared-dictionary STRUCT; behind
 ``LayerData.extensions``, GEOMETRY_Z, LIST, MAP, VEC2/VEC3, RANGE_MAP and
-the logical DATE/TIMESTAMP/JSON types. Decode and re-encode read a layer
-with one column walk (``_read_layer``); ``inspect_tile`` walks stream
-headers only.
+the logical DATE/TIMESTAMP/JSON types. Decode, re-encode and inspect read
+a layer with one column walk (``_read_layer``); its bounds-checked stream
+reader also records every stream header for ``inspect_tile``.
 """
 
 from __future__ import annotations
@@ -297,10 +297,11 @@ def _int_stream(
     return meta + r.payload
 
 
-def _decode_int_stream_with_meta(buf: bytes, pos: int, meta: dict, signed: bool, bits: int = 32) -> tuple[np.ndarray, int]:
+def _decode_ints(meta: dict, payload, signed: bool = False, bits: int = 32) -> np.ndarray:
+    """One integer stream's payload bytes → its values."""
     return K.decode_int_stream(
-        buf,
-        pos,
+        payload,
+        0,
         meta["num_values"],
         meta["byte_length"],
         meta["llt1"],
@@ -310,7 +311,7 @@ def _decode_int_stream_with_meta(buf: bytes, pos: int, meta: dict, signed: bool,
         num_rle_values=meta.get("num_rle_values", 0),
         bits=bits,
         plt=meta["plt"],
-    )
+    )[0]
 
 
 def _boolean_stream(bits: np.ndarray, pst: int) -> bytes:
@@ -682,12 +683,6 @@ def _f64_stream(arr: np.ndarray) -> bytes:
     )
 
 
-def _decode_f64_stream(buf: bytes, pos: int) -> tuple[np.ndarray, int]:
-    m, pos = K.unpack_stream_metadata(buf, pos)
-    arr = np.frombuffer(bytes(buf[pos : pos + m["byte_length"]]), dtype="<f8")
-    return arr, pos + m["byte_length"]
-
-
 def encode_vec_column(col: VecColumn) -> bytes:
     """[PRESENT] + one dims-interleaved component data stream."""
     present = np.array([v is not None for v in col.values])
@@ -902,7 +897,7 @@ def decode_tile(
             continue
         if layers is not None and _get_string(buf, pos)[0] not in layers:
             continue
-        name, extent, _body_pos, cols = _read_layer(buf, pos, end, columns)
+        name, extent, _body_pos, cols, _streams = _read_layer(buf, pos, end, columns)
         ids = geometry = triangles = index_buffer = None
         props: dict[str, list] = {}
         prop_types: dict[str, str] = {}
@@ -939,7 +934,7 @@ def reencode_tile(buf: bytes, use_fsst: bool = True, fixture_rules: bool = True)
             # unknown frame: copy verbatim INCLUDING the full length varint
             out += bytes(buf[frame_start:end])
             continue
-        _name, _extent, body_pos, cols = _read_layer(buf, pos, end)
+        _name, _extent, body_pos, cols, _streams = _read_layer(buf, pos, end)
         # the layer header (name, extent, column types) is copied as read
         payload = _varint1(tag) + bytes(buf[pos:body_pos])
         for tc, _cname, col in cols:
@@ -982,82 +977,119 @@ def _reencode_column(tc: int, col, use_fsst: bool, fixture_rules: bool) -> bytes
     return encoders[type(col)](col, use_fsst=use_fsst)
 
 
-def _skip_streams(buf: bytes, pos: int, n_streams: int) -> int:
-    """Advance over ``n_streams`` streams without decoding payloads."""
-    for _ in range(n_streams):
-        meta, pos = K.unpack_stream_metadata(buf, pos)
-        pos += meta["byte_length"]
-    return pos
+class _StreamReader:
+    """The codec's one reader of stream headers (StreamMetadata.java:53-94).
+    It walks the column bodies of one layer frame and hands out each
+    payload bounded by its own byte length. It rejects a stream whose
+    header or payload runs past the frame end, or whose header names an
+    unknown stream type or logical technique. ``streams`` records
+    ``(column label, metadata, payload offset)`` per stream in file
+    order."""
+
+    def __init__(self, buf: bytes, pos: int, end: int):
+        self.buf = memoryview(buf)
+        self.pos = pos
+        self.end = end
+        self.label = ""
+        self.streams: list[tuple[str, dict, int]] = []
+
+    def count(self) -> int:
+        """A varint stream or child count."""
+        v, self.pos = K.varint_decode(self.buf, 1, self.pos)
+        if self.pos > self.end:
+            raise ValueError(f"count at byte {self.pos} runs past the frame end {self.end}")
+        return int(v[0])
+
+    def next(self) -> tuple[dict, memoryview]:
+        """The next stream → (metadata, payload)."""
+        start = self.pos
+        if start + 2 > self.end:
+            raise ValueError(f"stream header at byte {start} runs past the frame end {self.end}")
+        meta, p = K.unpack_stream_metadata(self.buf, start)
+        if meta["physical_stream_type"] > K.PST_LENGTH or max(meta["llt1"], meta["llt2"]) > K.LLT_PDE:
+            raise ValueError(f"stream at byte {start}: unknown stream type or logical technique")
+        self.pos = p + meta["byte_length"]
+        if self.pos > self.end:
+            raise ValueError(f"stream at byte {start} ends at {self.pos}, past the frame end {self.end}")
+        self.streams.append((self.label, meta, p))
+        return meta, self.buf[p : self.pos]
+
+    def ints(self, signed: bool = False, bits: int = 32) -> np.ndarray:
+        return _decode_ints(*self.next(), signed=signed, bits=bits)
+
+    def bools(self) -> np.ndarray:
+        meta, payload = self.next()
+        return K.boolean_rle_decode(payload, meta["num_values"], meta["byte_length"])[0]
 
 
 def _read_layer(
     buf: bytes, pos: int, end: int, columns: set[str] | None = None
-) -> tuple[str, int, int, list]:
+) -> tuple[str, int, int, list, list]:
     """Walk one layer's columns in file order → (name, extent, position of
     the first column's streams, one ``(type code, name, column)`` per
-    column). Each column is the value-model object its encoder takes: the
-    ids array (like ``LayerData.ids``; a nullable ID column is a
-    ``PropColumn`` named "id"), ``PropColumn``, ``StructColumn``,
-    ``ListColumn``, ``MapColumn``, ``VecColumn``, ``RangeMapColumn``;
-    geometry is ``(GeometryColumn, triangles, index_buffer)``. A scalar
-    column left out by ``columns`` is skipped without decoding and reads as
-    None. Raises ``ValueError`` when the walk does not end exactly at the
-    frame end ``end``."""
+    column, the stream record). Each column is the value-model object its
+    encoder takes: the ids array (like ``LayerData.ids``; a nullable ID
+    column is a ``PropColumn`` named "id"), ``PropColumn``,
+    ``StructColumn``, ``ListColumn``, ``MapColumn``, ``VecColumn``,
+    ``RangeMapColumn``; geometry is ``(GeometryColumn, triangles,
+    index_buffer)``. A scalar column left out by ``columns`` is skipped
+    without decoding and reads as None. The stream record holds
+    ``(column label, metadata, payload offset)`` for every stream, skipped
+    ones included. A malformed layer raises ``ValueError``, also when the
+    walk does not end exactly at the frame end ``end``."""
     name, extent, header, pos = _read_layer_header(buf, pos)
-    body_pos = pos
+    if pos > end:
+        raise ValueError(f"layer {name!r}: header ends at byte {pos}, past the frame end {end}")
+    r = _StreamReader(buf, pos, end)
     cols = []
     for tc, cname, children in header:
-        kind, nullable = tc & ~1, bool(tc & 1)
-        elem = _CODE_TO_SCALAR.get(children[0][0] & ~1) if children else None  # LIST/VEC
-        if tc <= TC_ID_U64 and not nullable:
-            m, pos = K.unpack_stream_metadata(buf, pos)
-            col, pos = _decode_int_stream_with_meta(buf, pos, m, signed=False, bits=64 if tc == TC_ID_U64 else 32)
-        elif tc <= TC_ID_U64_NULL:  # nullable ids, which encode_layer never writes
-            id_type = "uint64" if tc >= TC_ID_U64 else "uint32"
-            values, pos = _decode_scalar_column(buf, pos, id_type, nullable)
-            col = PropColumn("id", id_type, values, nullable)
-        elif tc in (TC_GEOMETRY, TC_GEOMETRY_Z):
-            v, pos = K.varint_decode(buf, 1, pos)
-            g, triangles, index_buffer, pos = _decode_geometry_column(buf, pos, int(v[0]))
-            if tc == TC_GEOMETRY_Z:
-                m, pos = K.unpack_stream_metadata(buf, pos)
-                zvals, pos = _decode_int_stream_with_meta(buf, pos, m, signed=True, bits=32)
-                g.z = np.asarray(zvals, dtype=np.int64)
-            col = (g, triangles, index_buffer)
-        elif tc == TC_STRUCT:
-            col, pos = _decode_shared_dict_struct(buf, pos, cname, children)
-        elif kind == TC_LIST:
-            values, pos = _decode_list_column(buf, pos, nullable, elem)
-            col = ListColumn(cname, elem, values, nullable)
-        elif kind == TC_MAP:
-            values, pos = _decode_map_column(buf, pos, nullable)
-            col = MapColumn(cname, values, nullable)
-        elif kind in (TC_VEC2, TC_VEC3):
-            dims = 3 if kind == TC_VEC3 else 2
-            values, pos = _decode_vec_column(buf, pos, nullable, elem, dims)
-            col = VecColumn(cname, elem, values, dims, nullable)
-        elif kind == TC_RANGE_MAP:
-            values, pos = _decode_range_map_column(buf, pos, nullable)
-            col = RangeMapColumn(cname, values, nullable)
-        else:
-            ctype = _CODE_TO_LOGICAL.get(kind) or _CODE_TO_SCALAR[kind]
-            scalar = _LOGICAL_PHYSICAL.get(ctype, ctype)
-            n_streams = 1 + nullable
-            if scalar == "string":  # string columns carry a stream count
-                v, pos = K.varint_decode(buf, 1, pos)
-                n_streams = int(v[0])
-            values = []
-            if columns is not None and cname not in columns:  # projection pushdown
-                values, pos = None, _skip_streams(buf, pos, n_streams)
-            elif scalar != "string":
-                values, pos = _decode_scalar_column(buf, pos, scalar, nullable)
-            elif n_streams:
-                values, pos = _decode_string_column(buf, pos, n_streams, nullable)
-            col = None if values is None else PropColumn(cname, ctype, values, nullable)
-        cols.append((tc, cname, col))
-    if pos != end:
-        raise ValueError(f"layer {name!r}: column walk ends at byte {pos}, frame at {end}")
-    return name, extent, body_pos, cols
+        r.label = "id" if tc <= TC_ID_U64_NULL else "geometry" if tc in (TC_GEOMETRY, TC_GEOMETRY_Z) else cname
+        try:
+            cols.append((tc, cname, _read_column(r, tc, cname, children, columns)))
+        except (IndexError, KeyError, TypeError, AttributeError) as e:
+            raise ValueError(f"layer {name!r}: malformed column {r.label!r} ({e!r})") from e
+    if r.pos != end:
+        raise ValueError(f"layer {name!r}: column walk ends at byte {r.pos}, frame at {end}")
+    return name, extent, pos, cols, r.streams
+
+
+def _read_column(r: _StreamReader, tc: int, cname: str | None, children: list, columns: set[str] | None):
+    """One column's streams → the value-model object ``_read_layer`` lists."""
+    kind, nullable = tc & ~1, bool(tc & 1)
+    elem = _CODE_TO_SCALAR.get(children[0][0] & ~1) if children else None  # LIST/VEC
+    if tc <= TC_ID_U64 and not nullable:
+        return r.ints(bits=64 if tc == TC_ID_U64 else 32)
+    if tc <= TC_ID_U64_NULL:  # nullable ids, which encode_layer never writes
+        id_type = "uint64" if tc >= TC_ID_U64 else "uint32"
+        return PropColumn("id", id_type, _decode_scalar_column(r, id_type, nullable), nullable)
+    if tc in (TC_GEOMETRY, TC_GEOMETRY_Z):
+        g, triangles, index_buffer = _decode_geometry_column(r, r.count())
+        if tc == TC_GEOMETRY_Z:
+            g.z = np.asarray(r.ints(signed=True), dtype=np.int64)
+        return g, triangles, index_buffer
+    if tc == TC_STRUCT:
+        return _decode_shared_dict_struct(r, cname, children)
+    if kind == TC_LIST:
+        return ListColumn(cname, elem, _decode_list_column(r, nullable, elem), nullable)
+    if kind == TC_MAP:
+        return MapColumn(cname, _decode_map_column(r, nullable), nullable)
+    if kind in (TC_VEC2, TC_VEC3):
+        dims = 3 if kind == TC_VEC3 else 2
+        return VecColumn(cname, elem, _decode_vec_column(r, nullable, elem, dims), dims, nullable)
+    if kind == TC_RANGE_MAP:
+        return RangeMapColumn(cname, _decode_range_map_column(r, nullable), nullable)
+    ctype = _CODE_TO_LOGICAL.get(kind) or _CODE_TO_SCALAR[kind]
+    scalar = _LOGICAL_PHYSICAL.get(ctype, ctype)
+    n_streams = r.count() if scalar == "string" else 1 + nullable  # string columns carry a stream count
+    if columns is not None and cname not in columns:  # projection pushdown
+        for _ in range(n_streams):
+            r.next()
+        return None
+    if scalar != "string":
+        values = _decode_scalar_column(r, scalar, nullable)
+    else:
+        values = _decode_string_column(r, n_streams, nullable) if n_streams else []
+    return PropColumn(cname, ctype, values, nullable)
 
 
 def _reassemble_collections(present, lengths: np.ndarray, flat: list, build) -> list:
@@ -1075,42 +1107,26 @@ def _reassemble_collections(present, lengths: np.ndarray, flat: list, build) -> 
     return out
 
 
-def _decode_list_column(buf: bytes, pos: int, nullable: bool, elem: str) -> tuple[list, int]:
-    v, pos = K.varint_decode(buf, 1, pos)
-    n_streams = int(v[0])
-    present = None
-    consumed = 0
-    if nullable:
-        present, pos = _decode_boolean_stream(buf, pos)
-        consumed += 1
-    m, pos = K.unpack_stream_metadata(buf, pos)
-    lengths, pos = _decode_int_stream_with_meta(buf, pos, m, signed=False, bits=32)
-    consumed += 1
+def _decode_list_column(r: _StreamReader, nullable: bool, elem: str) -> list:
+    n_streams = r.count()
+    present = r.bools() if nullable else None
+    lengths = r.ints()
     if elem == "string":
-        flat, pos = _decode_string_column(buf, pos, n_streams - consumed, nullable=False)
+        flat = _decode_string_column(r, n_streams - 1 - nullable, nullable=False)
     else:
-        flat, pos = _decode_scalar_column(buf, pos, elem, nullable=False)
-    return _reassemble_collections(present, np.asarray(lengths), list(flat), list), pos
+        flat = _decode_scalar_column(r, elem, nullable=False)
+    return _reassemble_collections(present, np.asarray(lengths), list(flat), list)
 
 
-def _decode_vec_column(
-    buf: bytes, pos: int, nullable: bool, elem: str, dims: int
-) -> tuple[list, int]:
-    present = None
-    if nullable:
-        present, pos = _decode_boolean_stream(buf, pos)
+def _decode_vec_column(r: _StreamReader, nullable: bool, elem: str, dims: int) -> list:
+    present = r.bools() if nullable else None
     if elem in ("int32", "int64"):
-        m, pos = K.unpack_stream_metadata(buf, pos)
-        flat, pos = _decode_int_stream_with_meta(
-            buf, pos, m, signed=True, bits=64 if elem == "int64" else 32
-        )
-        flat = flat.tolist()
+        flat = r.ints(signed=True, bits=64 if elem == "int64" else 32).tolist()
     else:
-        arr, pos = _decode_f64_stream(buf, pos)
-        flat = arr.tolist()
+        flat = np.frombuffer(r.next()[1], dtype="<f8").tolist()
     vecs = [tuple(flat[i : i + dims]) for i in range(0, len(flat), dims)]
     if present is None:
-        return vecs, pos
+        return vecs
     out = []
     k = 0
     for p in present:
@@ -1119,42 +1135,26 @@ def _decode_vec_column(
             k += 1
         else:
             out.append(None)
-    return out, pos
+    return out
 
 
-def _decode_range_map_column(buf: bytes, pos: int, nullable: bool) -> tuple[list, int]:
-    present = None
-    if nullable:
-        present, pos = _decode_boolean_stream(buf, pos)
-    m, pos = K.unpack_stream_metadata(buf, pos)
-    lengths, pos = _decode_int_stream_with_meta(buf, pos, m, signed=False, bits=32)
-    ranges, pos = _decode_f64_stream(buf, pos)
-    v, pos = K.varint_decode(buf, 1, pos)
-    vals, pos = _decode_string_column(buf, pos, int(v[0]), nullable=False)
+def _decode_range_map_column(r: _StreamReader, nullable: bool) -> list:
+    present = r.bools() if nullable else None
+    lengths = r.ints()
+    ranges = np.frombuffer(r.next()[1], dtype="<f8")
+    vals = _decode_string_column(r, r.count(), nullable=False)
     flat = [
         (float(ranges[2 * i]), float(ranges[2 * i + 1]), vals[i]) for i in range(len(vals))
     ]
-    return _reassemble_collections(present, np.asarray(lengths), flat, list), pos
+    return _reassemble_collections(present, np.asarray(lengths), flat, list)
 
 
-def _decode_map_column(buf: bytes, pos: int, nullable: bool) -> tuple[list, int]:
-    present = None
-    if nullable:
-        present, pos = _decode_boolean_stream(buf, pos)
-    m, pos = K.unpack_stream_metadata(buf, pos)
-    lengths, pos = _decode_int_stream_with_meta(buf, pos, m, signed=False, bits=32)
-    v, pos = K.varint_decode(buf, 1, pos)
-    keys, pos = _decode_string_column(buf, pos, int(v[0]), nullable=False)
-    v, pos = K.varint_decode(buf, 1, pos)
-    vals, pos = _decode_string_column(buf, pos, int(v[0]), nullable=False)
-    flat = list(zip(keys, vals))
-    return _reassemble_collections(present, np.asarray(lengths), flat, dict), pos
-
-
-def _decode_boolean_stream(buf: bytes, pos: int) -> tuple[np.ndarray, int]:
-    meta, pos = K.unpack_stream_metadata(buf, pos)
-    bits, _ = K.boolean_rle_decode(buf, meta["num_values"], meta["byte_length"], pos)
-    return bits, pos + meta["byte_length"]
+def _decode_map_column(r: _StreamReader, nullable: bool) -> list:
+    present = r.bools() if nullable else None
+    lengths = r.ints()
+    keys = _decode_string_column(r, r.count(), nullable=False)
+    vals = _decode_string_column(r, r.count(), nullable=False)
+    return _reassemble_collections(present, np.asarray(lengths), list(zip(keys, vals)), dict)
 
 
 def _merge_present(present: np.ndarray, vals: list) -> list:
@@ -1166,35 +1166,29 @@ def _merge_present(present: np.ndarray, vals: list) -> list:
     return out.tolist()
 
 
-def _decode_scalar_column(buf: bytes, pos: int, scalar: str, nullable: bool) -> tuple[list, int]:
-    present = None
-    if nullable:
-        present, pos = _decode_boolean_stream(buf, pos)
+def _decode_scalar_column(r: _StreamReader, scalar: str, nullable: bool) -> list:
+    present = r.bools() if nullable else None
     if scalar == "boolean":
-        vals_bits, pos = _decode_boolean_stream(buf, pos)
-        vals = vals_bits.tolist()
+        vals = r.bools().tolist()
     elif scalar in ("int32", "uint32", "int64", "uint64"):
-        meta, pos = K.unpack_stream_metadata(buf, pos)
         bits = 64 if scalar.endswith("64") else 32
-        arr, pos = _decode_int_stream_with_meta(buf, pos, meta, signed=scalar.startswith("int"), bits=bits)
-        vals = arr.tolist()
+        vals = r.ints(signed=scalar.startswith("int"), bits=bits).tolist()
     elif scalar in ("float", "double"):
-        meta, pos = K.unpack_stream_metadata(buf, pos)
+        meta, payload = r.next()
         # f32 regardless of declared width (reference FloatDecoder behavior)
-        arr = np.frombuffer(buf, dtype=np.dtype("<f4"), count=meta["num_values"], offset=pos)
-        pos += meta["byte_length"]
+        arr = np.frombuffer(payload, dtype=np.dtype("<f4"), count=meta["num_values"])
         vals = arr.astype(np.float64).tolist()
     else:
         raise ValueError(scalar)
     if present is None:
-        return vals, pos
-    return _merge_present(present, vals), pos
+        return vals
+    return _merge_present(present, vals)
 
 
-def _decode_string_column(buf: bytes, pos: int, n_streams: int, nullable: bool) -> tuple[list, int]:
+def _decode_string_column(r: _StreamReader, n_streams: int, nullable: bool) -> list:
     present = None
     if nullable:
-        present, pos = _decode_boolean_stream(buf, pos)
+        present = r.bools()
         n_streams -= 1
     dict_lengths = None
     sym_lengths = None
@@ -1202,23 +1196,21 @@ def _decode_string_column(buf: bytes, pos: int, n_streams: int, nullable: bool) 
     sym_bytes = None
     offsets = None
     for _ in range(n_streams):
-        meta, pos = K.unpack_stream_metadata(buf, pos)
+        meta, payload = r.next()
         pst = meta["physical_stream_type"]
         if pst == K.PST_OFFSET:
-            offsets, pos = _decode_int_stream_with_meta(buf, pos, meta, signed=False)
+            offsets = _decode_ints(meta, payload)
         elif pst == K.PST_LENGTH:
-            arr, pos = _decode_int_stream_with_meta(buf, pos, meta, signed=False)
+            arr = _decode_ints(meta, payload)
             if meta["logical_type"] == LT_DICTIONARY:
                 dict_lengths = arr
             else:
                 sym_lengths = arr
         elif pst == K.PST_DATA:
-            raw = bytes(buf[pos : pos + meta["byte_length"]])
-            pos += meta["byte_length"]
             if meta["logical_type"] in (DT_SINGLE, DT_SHARED):
-                dict_bytes = raw
+                dict_bytes = bytes(payload)
             else:
-                sym_bytes = raw
+                sym_bytes = bytes(payload)
     if sym_bytes is not None and sym_lengths is not None and dict_lengths is not None:
         # FSST dictionary: expand symbols then slice by dict lengths
         corpus = fsst_decode(sym_bytes, sym_lengths, dict_bytes)
@@ -1231,8 +1223,8 @@ def _decode_string_column(buf: bytes, pos: int, n_streams: int, nullable: bool) 
         strings = _slice_strings(sym_bytes, sym_lengths)
         vals = strings
     if present is None:
-        return vals, pos
-    return _merge_present(present, vals), pos
+        return vals
+    return _merge_present(present, vals)
 
 
 def _slice_strings(data: bytes, lengths: np.ndarray) -> list[str]:
@@ -1244,34 +1236,29 @@ def _slice_strings(data: bytes, lengths: np.ndarray) -> list[str]:
     return out
 
 
-def _decode_shared_dict_struct(
-    buf: bytes, pos: int, root_name: str, children: list
-) -> tuple[StructColumn, int]:
+def _decode_shared_dict_struct(r: _StreamReader, root_name: str, children: list) -> StructColumn:
     """Shared-dictionary struct (StringDecoder.decodeSharedDictionary)."""
-    v, pos = K.varint_decode(buf, 1, pos)
-    n_streams = int(v[0])
-    if n_streams == 0:  # no child has a value: encode_struct_column writes only the count
-        return StructColumn(root_name, [(ch_name or "", []) for _tc, ch_name in children]), pos
+    if r.count() == 0:  # no child has a value: encode_struct_column writes only the count
+        return StructColumn(root_name, [(ch_name or "", []) for _tc, ch_name in children])
+    r.label = root_name or "struct"
     dict_lengths = None
     dict_bytes = None
     sym_lengths = None
     sym_bytes = None
     while True:
-        meta, pos = K.unpack_stream_metadata(buf, pos)
+        meta, payload = r.next()
         pst = meta["physical_stream_type"]
         if pst == K.PST_LENGTH:
-            arr, pos = _decode_int_stream_with_meta(buf, pos, meta, signed=False)
+            arr = _decode_ints(meta, payload)
             if meta["logical_type"] == LT_DICTIONARY:
                 dict_lengths = arr
             else:
                 sym_lengths = arr
         elif pst == K.PST_DATA:
-            raw = bytes(buf[pos : pos + meta["byte_length"]])
-            pos += meta["byte_length"]
             if meta["logical_type"] in (DT_SINGLE, DT_SHARED):
-                dict_bytes = raw
+                dict_bytes = bytes(payload)
                 break
-            sym_bytes = raw
+            sym_bytes = bytes(payload)
         else:
             raise ValueError("unexpected stream in shared dictionary")
     if sym_bytes is not None and sym_lengths is not None:
@@ -1281,16 +1268,15 @@ def _decode_shared_dict_struct(
         strings = _slice_strings(dict_bytes, dict_lengths)
     out = []
     for _tc, ch_name in children:
-        v, pos = K.varint_decode(buf, 1, pos)
-        ns = int(v[0])
+        r.label = root_name + (ch_name or "")
+        ns = r.count()
         if ns == 0:  # no values present for this child in this tile
             out.append((ch_name or "", []))
             continue
         if ns != 2:
             raise ValueError("struct child must have present+offset streams")
-        present, pos = _decode_boolean_stream(buf, pos)
-        meta, pos = K.unpack_stream_metadata(buf, pos)
-        offs, pos = _decode_int_stream_with_meta(buf, pos, meta, signed=False)
+        present = r.bools()
+        offs = r.ints()
         vals, i = [], 0
         for p in present:
             if p:
@@ -1299,7 +1285,7 @@ def _decode_shared_dict_struct(
             else:
                 vals.append(None)
         out.append((ch_name or "", vals))
-    return StructColumn(root_name, out), pos
+    return StructColumn(root_name, out)
 
 
 # ---------------------------------------------------------------------------
@@ -1307,18 +1293,17 @@ def _decode_shared_dict_struct(
 # ---------------------------------------------------------------------------
 
 
-def _decode_geometry_column(buf: bytes, pos: int, n_streams: int):
-    meta, pos = K.unpack_stream_metadata(buf, pos)
-    types, pos = _decode_int_stream_with_meta(buf, pos, meta, signed=False)
+def _decode_geometry_column(r: _StreamReader, n_streams: int):
+    types = r.ints()
     num_geometries = num_parts = num_rings = None
     triangles = index_buffer = None
     vertex_offsets = None
     vertices = None
     for _ in range(n_streams - 1):
-        meta, pos = K.unpack_stream_metadata(buf, pos)
+        meta, payload = r.next()
         pst = meta["physical_stream_type"]
         if pst == K.PST_LENGTH:
-            arr, pos = _decode_int_stream_with_meta(buf, pos, meta, signed=False)
+            arr = _decode_ints(meta, payload)
             lt = meta["logical_type"]
             if lt == LT_GEOMETRIES:
                 num_geometries = arr
@@ -1329,7 +1314,7 @@ def _decode_geometry_column(buf: bytes, pos: int, n_streams: int):
             elif lt == LT_TRIANGLES:
                 triangles = arr
         elif pst == K.PST_OFFSET:
-            arr, pos = _decode_int_stream_with_meta(buf, pos, meta, signed=False)
+            arr = _decode_ints(meta, payload)
             if meta["logical_type"] == OT_VERTEX:
                 vertex_offsets = arr
             else:
@@ -1338,10 +1323,9 @@ def _decode_geometry_column(buf: bytes, pos: int, n_streams: int):
             if meta["plt"] == K.PLT_FASTPFOR:
                 from maplibre_tile_spec_spark.functions.fastpfor import fastpfor_decode
 
-                raw = fastpfor_decode(buf, pos, meta["num_values"], meta["byte_length"]).astype(np.uint64)
-                pos += meta["byte_length"]
+                raw = fastpfor_decode(payload, 0, meta["num_values"], meta["byte_length"]).astype(np.uint64)
             else:
-                raw, pos = K.varint_decode(buf, meta["num_values"], pos)
+                raw, _ = K.varint_decode(payload, meta["num_values"])
             if meta["logical_type"] == DT_MORTON:
                 codes = K.delta_decode(raw.view(np.int64))
                 mx, my = K.morton_decode(codes.astype(np.uint64), shift=meta["coordinate_shift"])
@@ -1371,7 +1355,7 @@ def _decode_geometry_column(buf: bytes, pos: int, n_streams: int):
         num_rings=num_rings if num_rings is not None else np.empty(0, np.int64),
         vertices=vertices if vertices is not None else np.empty(0, np.int64),
     )
-    return g, triangles, index_buffer, pos
+    return g, triangles, index_buffer
 
 
 def geometry_to_features(g: GeometryColumn) -> list[tuple[int, list[list[np.ndarray]]]]:
@@ -1384,6 +1368,8 @@ def geometry_to_features(g: GeometryColumn) -> list[tuple[int, list[list[np.ndar
     def take(n: int) -> np.ndarray:
         nonlocal vi
         vi += n
+        if vi > vb.shape[0]:
+            raise ValueError("geometry topology walk ran past the vertex buffer")
         return vb[vi - n : vi]
 
     def closed_ring(n: int) -> np.ndarray:
@@ -1419,82 +1405,33 @@ def geometry_to_features(g: GeometryColumn) -> list[tuple[int, list[list[np.ndar
 
 _PST_NAMES = ["present", "data", "offset", "length"]
 _LLT_NAMES = ["none", "delta", "componentwise_delta", "rle", "morton", "pde"]
-LLT_NONE_ORD = 0
 
 
 def inspect_tile(buf: bytes) -> list[dict]:
-    """Walk a tile without materializing values → one record per stream:
-    layer, column, stream kind, logical technique, value count, byte size.
-    Feeds the same size-analysis workflows as the reference's stream
-    observer, but as plain dicts (→ DataFrame rows at scale). Covers every
-    column kind ``encode_layer`` emits; raises ``ValueError`` when a layer's
-    walk does not end exactly at its frame end."""
+    """One record per stream of a tile: layer, column, stream kind, logical
+    technique, value count, byte size. Feeds the same size-analysis
+    workflows as the reference's stream observer, but as plain dicts
+    (→ DataFrame rows at scale). The records are ``_read_layer``'s stream
+    record with scalar and string payloads skipped, so every column kind
+    the decoder reads is covered and a malformed layer raises
+    ``ValueError``."""
     records = []
     for _start, tag, pos, end in _iter_frames(buf):
         if tag not in (TAG_EMBEDDED, TAG_EXTENDED):
             continue
-        name, _extent, cols, p = _read_layer_header(buf, pos)
-
-        def emit(col_label: str, n_streams: int | None = None) -> None:
-            """Record and skip ``n_streams`` streams; ``None`` reads the
-            count from a leading varint (a varint-prefixed stream group)."""
-            nonlocal p
-            if n_streams is None:
-                ns, p = K.varint_decode(buf, 1, p)
-                n_streams = int(ns[0])
-            for _ in range(n_streams):
-                meta, p2 = K.unpack_stream_metadata(buf, p)
-                records.append(
-                    {
-                        "layer": name,
-                        "column": col_label,
-                        "stream": _PST_NAMES[meta["physical_stream_type"]],
-                        "technique": _LLT_NAMES[meta["llt1"]]
-                        + (f"+{_LLT_NAMES[meta['llt2']]}" if meta["llt2"] != LLT_NONE_ORD else ""),
-                        "num_values": meta["num_values"],
-                        "byte_length": meta["byte_length"],
-                    }
-                )
-                p = p2 + meta["byte_length"]
-
-        for tc, cname, children in cols:
-            kind, nullable = tc & ~1, tc & 1
-            if tc in (TC_ID_U32, TC_ID_U32_NULL, TC_ID_U64, TC_ID_U64_NULL):
-                emit("id", 1 + nullable)
-            elif tc in (TC_GEOMETRY, TC_GEOMETRY_Z):
-                emit("geometry")
-                if tc == TC_GEOMETRY_Z:  # one trailing z stream, not counted
-                    emit("geometry", 1)
-            elif tc == TC_STRUCT:
-                ns, p = K.varint_decode(buf, 1, p)
-                total = int(ns[0])
-                if total == 0:  # all-null struct: the count is the whole column
-                    continue
-                # shared dictionary streams: the declared count is
-                # 3+2*children (5+2*children with FSST) per StringEncoder,
-                # but only 2 (resp. 4) physical streams precede the children
-                # — the remaining "+1" is accounting for the child varints,
-                # so subtract it or we over-read one stream header here
-                emit(cname or "struct", total - 2 * len(children) - 1)
-                for _tc2, ch in children:
-                    emit((cname or "") + (ch or ""))
-            elif kind == TC_LIST:  # the count covers present, length, elements
-                emit(cname)
-            elif kind == TC_MAP:  # [present] + length, then keys and values
-                emit(cname, nullable + 1)
-                emit(cname)
-                emit(cname)
-            elif kind in (TC_VEC2, TC_VEC3):  # [present] + one data stream
-                emit(cname, nullable + 1)
-            elif kind == TC_RANGE_MAP:  # [present] + length + ranges, values
-                emit(cname, nullable + 2)
-                emit(cname)
-            else:
-                logical = _CODE_TO_LOGICAL.get(kind)
-                scalar = _LOGICAL_PHYSICAL[logical] if logical else _CODE_TO_SCALAR[kind]
-                emit(cname, None if scalar == "string" else 1 + nullable)
-        if p != end:
-            raise ValueError(f"layer {name!r}: column walk ends at byte {p}, frame at {end}")
+        name, _extent, _body_pos, _cols, streams = _read_layer(buf, pos, end, columns=set())
+        records.extend(
+            {
+                "layer": name,
+                "column": label,
+                "stream": _PST_NAMES[meta["physical_stream_type"]],
+                "technique": _LLT_NAMES[meta["llt1"]]
+                + (f"+{_LLT_NAMES[meta['llt2']]}" if meta["llt2"] != K.LLT_NONE else ""),
+                "num_values": meta["num_values"],
+                "byte_length": meta["byte_length"],
+            }
+            for label, meta, _payload_pos in streams
+        )
     return records
 
 

@@ -16,37 +16,54 @@ import numpy as np
 def _varint(buf: memoryview, pos: int) -> tuple[int, int]:
     result = 0
     shift = 0
-    while True:
+    while pos < len(buf):
         b = buf[pos]
         pos += 1
         result |= (b & 0x7F) << shift
         if not b & 0x80:
+            if result >> 64:
+                raise ValueError("MVT varint wider than 64 bits")
             return result, pos
         shift += 7
+        if shift > 63:
+            raise ValueError("MVT varint longer than 10 bytes")
+    raise ValueError("MVT varint runs past the end of its message")
 
 
-def _fields(buf: memoryview):
-    """Iterate (field_number, wire_type, value) over a protobuf message."""
+_FIXED_SIZES = {5: 4, 1: 8}  # wire type → byte width
+# accepted wire types per known field of each message (vector-tile-spec
+# 2.1); feature tags and geometry may also arrive unpacked, one varint each
+_TILE_FIELDS = {3: (2,)}
+_LAYER_FIELDS = {1: (2,), 2: (2,), 3: (2,), 4: (2,), 5: (0,), 15: (0,)}
+_FEATURE_FIELDS = {1: (0,), 2: (0, 2), 3: (0,), 4: (0, 2)}
+_VALUE_FIELDS = {1: (2,), 2: (5,), 3: (1,), 4: (0,), 5: (0,), 6: (0,), 7: (0,)}
+
+
+def _fields(buf: memoryview, wire_types: dict[int, tuple[int, ...]] | None = None):
+    """Iterate (field_number, wire_type, value) over a protobuf message. A
+    field that runs past the message end, or a field of ``wire_types`` with
+    a wire type it does not list, raises ``ValueError``."""
     pos = 0
     n = len(buf)
     while pos < n:
         key, pos = _varint(buf, pos)
         fn, wt = key >> 3, key & 7
+        if wire_types and wt not in wire_types.get(fn, (wt,)):
+            raise ValueError(f"field {fn} has wire type {wt}, expected one of {wire_types[fn]}")
         if wt == 0:
             v, pos = _varint(buf, pos)
             yield fn, wt, v
-        elif wt == 2:
+            continue
+        if wt == 2:
             ln, pos = _varint(buf, pos)
-            yield fn, wt, buf[pos : pos + ln]
-            pos += ln
-        elif wt == 5:
-            yield fn, wt, bytes(buf[pos : pos + 4])
-            pos += 4
-        elif wt == 1:
-            yield fn, wt, bytes(buf[pos : pos + 8])
-            pos += 8
+        elif wt in _FIXED_SIZES:
+            ln = _FIXED_SIZES[wt]
         else:
             raise ValueError(f"unsupported wire type {wt}")
+        if pos + ln > n:
+            raise ValueError(f"field {fn} runs past the end of its message")
+        yield fn, wt, buf[pos : pos + ln] if wt == 2 else bytes(buf[pos : pos + ln])
+        pos += ln
 
 
 def _packed_varints(buf: memoryview) -> list[int]:
@@ -86,7 +103,7 @@ _VALUE_KINDS = {1: "string", 2: "float", 3: "double", 4: "int", 5: "uint", 6: "s
 
 
 def _decode_value_kind(buf: memoryview):
-    for fn, wt, v in _fields(buf):
+    for fn, _wt, v in _fields(buf, _VALUE_FIELDS):
         kind = _VALUE_KINDS.get(fn)
         if fn == 1:
             return bytes(v).decode("utf-8"), kind
@@ -106,6 +123,8 @@ def _decode_value_kind(buf: memoryview):
 
 
 def _decode_geometry(commands: list[int]) -> tuple[list[np.ndarray], list[bool]]:
+    """MoveTo/LineTo/ClosePath commands → vertex runs; commands that run
+    past their parameters or close an empty ring raise ``ValueError``."""
     runs: list[np.ndarray] = []
     closed: list[bool] = []
     x = y = 0
@@ -115,6 +134,8 @@ def _decode_geometry(commands: list[int]) -> tuple[list[np.ndarray], list[bool]]
         cmd = commands[i]
         op, count = cmd & 7, cmd >> 3
         i += 1
+        if op in (1, 2) and i + 2 * count > len(commands):
+            raise ValueError("MVT geometry command runs past its parameters")
         if op == 1:  # MoveTo
             for _ in range(count):
                 if cur:
@@ -132,6 +153,8 @@ def _decode_geometry(commands: list[int]) -> tuple[list[np.ndarray], list[bool]]
                 i += 2
                 cur.append((x, y))
         elif op == 7:  # ClosePath
+            if not cur:
+                raise ValueError("MVT ClosePath without an open ring")
             runs.append(np.array(cur))
             closed.append(True)
             cur = []
@@ -144,8 +167,9 @@ def _decode_geometry(commands: list[int]) -> tuple[list[np.ndarray], list[bool]]
 
 
 def decode_mvt(data: bytes) -> list[MvtLayer]:
+    """MVT bytes → layers; malformed input raises ``ValueError``."""
     layers = []
-    for fn, _wt, v in _fields(memoryview(data)):
+    for fn, _wt, v in _fields(memoryview(data), _TILE_FIELDS):
         if fn != 3:
             continue
         name = ""
@@ -153,7 +177,7 @@ def decode_mvt(data: bytes) -> list[MvtLayer]:
         keys: list[str] = []
         values: list = []
         raw_features = []
-        for lf, _lw, lv in _fields(v):
+        for lf, _lw, lv in _fields(v, _LAYER_FIELDS):
             if lf == 1:
                 name = bytes(lv).decode("utf-8")
             elif lf == 2:
@@ -170,7 +194,7 @@ def decode_mvt(data: bytes) -> list[MvtLayer]:
             gtype = 0
             tags: list[int] = []
             cmds: list[int] = []
-            for ff, fw, fv in _fields(rf):
+            for ff, fw, fv in _fields(rf, _FEATURE_FIELDS):
                 if ff == 1:
                     fid = fv
                 elif ff == 2:
@@ -179,6 +203,10 @@ def decode_mvt(data: bytes) -> list[MvtLayer]:
                     gtype = fv
                 elif ff == 4:
                     cmds = _packed_varints(fv) if fw == 2 else cmds + [fv]
+            if len(tags) % 2 or any(k >= len(keys) for k in tags[0::2]) or any(
+                t >= len(values) for t in tags[1::2]
+            ):
+                raise ValueError("MVT feature tags are odd in count or index past the key/value tables")
             props = {keys[tags[i]]: values[tags[i + 1]][0] for i in range(0, len(tags), 2)}
             kinds = {keys[tags[i]]: values[tags[i + 1]][1] for i in range(0, len(tags), 2)}
             runs, closed = _decode_geometry(cmds)

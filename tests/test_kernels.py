@@ -108,6 +108,16 @@ class TestByteRle:
         dec, _ = K.boolean_rle_decode(enc, len(bits), len(enc))
         assert np.array_equal(dec, b)
 
+    def test_counts_the_stream_cannot_hold_raise_before_allocating(self):
+        enc = K.boolean_rle_encode(np.ones(1040, dtype=bool))  # one 130-byte run
+        assert K.boolean_rle_decode(enc, 1040, len(enc))[0].all()
+        with pytest.raises(ValueError, match="cannot expand"):
+            K.boolean_rle_decode(enc, 1041 * 8, len(enc))
+        with pytest.raises(ValueError, match="cannot expand"):
+            K.boolean_rle_decode(enc, 2**60, len(enc))
+        with pytest.raises(ValueError, match="inside a run"):
+            K.byte_rle_decode(bytes([0xF0, 1, 2]), 16)  # a 16-byte literal cut after 2
+
 
 def _small_step_walk() -> np.ndarray:
     """2-byte values, 1-byte deltas, too few delta runs to gate in RLE:
@@ -163,6 +173,16 @@ class TestIntStreamSelection:
             num_runs_meta=r.num_runs, num_rle_values=r.num_rle_values,
         )
         assert np.array_equal(out, v)
+
+    def test_rle_runs_must_match_the_metadata_count(self):
+        r = K.encode_int_stream(np.array([4] * 50 + [9] * 50), signed=False)
+        assert r.llt1 == K.LLT_RLE and r.num_rle_values == 100
+        for claimed in (99, 2**40):
+            with pytest.raises(ValueError, match="RLE runs"):
+                K.decode_int_stream(
+                    r.payload, 0, r.num_values, len(r.payload), r.llt1, r.llt2, False,
+                    num_runs_meta=r.num_runs, num_rle_values=claimed,
+                )
 
 
 class TestVec2:
@@ -305,6 +325,15 @@ class TestFastPfor:
             assert not comp[n:].any(), f"vector {i}: non-zero past our length"
             dec = FP.fastpfor_decode(ours_bytes, 0, unc.shape[0], len(ours_bytes))
             assert np.array_equal(dec, unc), f"vector {i}: roundtrip"
+
+    def test_counts_the_stream_cannot_hold_raise(self):
+        from maplibre_tile_spec_spark.functions import fastpfor as FP
+
+        payload = FP.fastpfor_encode(np.arange(300, dtype=np.uint32))
+        assert FP.fastpfor_decode(payload, 0, 300, len(payload)).tolist() == list(range(300))
+        for n in (299, 128 * len(payload) + 1, 2**40):
+            with pytest.raises(ValueError, match="FastPFOR|VariableByte"):
+                FP.fastpfor_decode(payload, 0, n, len(payload))
 
     def test_decode_int_stream_dispatches_on_plt(self):
         from maplibre_tile_spec_spark.functions import fastpfor as FP

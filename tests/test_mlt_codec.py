@@ -355,6 +355,21 @@ class TestMalformedFrames:
             with pytest.raises(ValueError, match="inside its tag"):
                 walk(b"\x00" + self._tile())
 
+    @pytest.mark.parametrize(
+        "byte, mask, value",
+        [(0, 0xF0, 7 << 4), (1, 0xE0, 7 << 5), (1, 0x1C, 6 << 2)],
+        ids=["stream_type_7", "technique_7", "second_technique_6"],
+    )
+    def test_unknown_stream_type_or_technique_raises(self, byte, mask, value):
+        tile = self._tile()
+        _start, _tag, pos, end = next(C._iter_frames(tile))
+        at = C._read_layer(tile, pos, end)[2] + byte  # in the id stream's header
+        bad = bytearray(tile)
+        bad[at] = bad[at] & ~mask | value
+        for walk in self.WALKERS:
+            with pytest.raises(ValueError, match="unknown stream type or logical technique"):
+                walk(bytes(bad))
+
 
 class TestPretessellated:
     def test_tessellated_layer_roundtrip(self):
@@ -422,93 +437,42 @@ class TestFsstEncode:
         assert la.props["class"] == vals
 
 
+def fsst_triples(tile: bytes) -> list[tuple[bytes, np.ndarray, bytes]]:
+    """(symbol table, symbol lengths, compressed dictionary) of every FSST
+    dictionary in a tile, read from ``_read_layer``'s stream record: the
+    table stream sits between the symbol lengths and the dictionary
+    lengths, and the compressed dictionary follows those."""
+    out = []
+    for _start, tag, pos, end in C._iter_frames(tile):
+        if tag not in (C.TAG_EMBEDDED, C.TAG_EXTENDED):
+            continue
+        record = C._read_layer(tile, pos, end)[-1]
+        streams = [(meta, tile[p : p + meta["byte_length"]]) for _label, meta, p in record]
+        for i, (meta, table) in enumerate(streams):
+            if (meta["physical_stream_type"], meta["logical_type"]) == (K.PST_DATA, C.DT_FSST):
+                (lens_meta, lens), (_, compressed) = streams[i - 1], streams[i + 2]
+                out.append((table, C._decode_ints(lens_meta, lens), compressed))
+    return out
+
+
+def assert_fsst_reencodes(triples) -> None:
+    for table, lens, comp in triples:
+        gt, gl, gc = C.fsst_encode(C.fsst_decode(table, lens, comp))
+        assert (gt, gl.tolist(), gc) == (table, lens.tolist(), comp)
+
+
 class TestFsstByteParity:
     """The encoder must be byte-identical to the reference's
-    SymbolTableBuilder — validated by re-encoding the corpora of real
-    fixture FSST streams and comparing (table, lengths, compressed) exactly.
+    SymbolTableBuilder — validated by re-encoding FSST streams and
+    comparing (table, lengths, compressed) exactly: the codec corpus's on
+    every host, and real fixture streams where the reference tree exists.
     A full sweep over all 2662 fixture streams passes; the suite keeps a
     representative sample per fixture family for runtime."""
 
-    def _triples(self, path):
-        buf = open(path, "rb").read()
-        out = []
-        for la_pos in [0]:
-            pass
-        # reuse decoder internals: walk tile, capture fsst stream triples
-        import maplibre_tile_spec_spark.functions.kernels as K2
-
-        pos, n = 0, len(buf)
-        while pos < n:
-            v, pos = K2.varint_decode(buf, 1, pos)
-            length = int(v[0])
-            start = pos
-            v, pos = K2.varint_decode(buf, 1, pos)
-            tag = int(v[0])
-            end = start + length
-            if tag != C.TAG_EMBEDDED:
-                pos = end
-                continue
-            _name, p = C._get_string(buf, pos)
-            v, p = K2.varint_decode(buf, 2, p)
-            cols = []
-            for _ in range(int(v[1])):
-                tcv, p = K2.varint_decode(buf, 1, p)
-                tc = int(tcv[0])
-                cname, children = None, []
-                if tc >= 10:
-                    cname, p = C._get_string(buf, p)
-                if tc == C.TC_STRUCT:
-                    cc, p = K2.varint_decode(buf, 1, p)
-                    for _ in range(int(cc[0])):
-                        ctc, p = K2.varint_decode(buf, 1, p)
-                        chn = None
-                        if int(ctc[0]) >= 10:
-                            chn, p = C._get_string(buf, p)
-                        children.append((int(ctc[0]), chn))
-                cols.append((tc, cname, children))
-
-            def read_streams(k):
-                nonlocal p
-                caps = []
-                for _ in range(k):
-                    meta, p2 = K2.unpack_stream_metadata(buf, p)
-                    caps.append((meta, bytes(buf[p2 : p2 + meta["byte_length"]])))
-                    p = p2 + meta["byte_length"]
-                return caps
-
-            def grab(caps):
-                sym_lengths = sym_table = compressed = None
-                for meta, raw in caps:
-                    pst = meta["physical_stream_type"]
-                    if pst == K2.PST_LENGTH and meta["logical_type"] == C.LT_SYMBOL:
-                        sym_lengths, _ = C._decode_int_stream_with_meta(raw, 0, meta, signed=False)
-                    elif pst == K2.PST_DATA and meta["logical_type"] == C.DT_FSST:
-                        sym_table = raw
-                    elif pst == K2.PST_DATA and meta["logical_type"] in (C.DT_SINGLE, C.DT_SHARED):
-                        compressed = raw
-                if sym_lengths is not None and sym_table is not None and compressed is not None:
-                    out.append((sym_table, sym_lengths, compressed))
-
-            for tc, _cname, children in cols:
-                if tc in (C.TC_ID_U32, C.TC_ID_U32_NULL, C.TC_ID_U64, C.TC_ID_U64_NULL):
-                    read_streams(1 + (tc & 1))
-                elif tc == C.TC_GEOMETRY:
-                    ns, p = K2.varint_decode(buf, 1, p)
-                    read_streams(int(ns[0]))
-                elif tc == C.TC_STRUCT:
-                    ns, p = K2.varint_decode(buf, 1, p)
-                    grab(read_streams(int(ns[0]) - 2 * len(children) - 1))
-                    for _tc2, _ch in children:
-                        cns, p = K2.varint_decode(buf, 1, p)
-                        read_streams(int(cns[0]))
-                else:
-                    if C._CODE_TO_SCALAR[tc & ~1] == "string":
-                        ns, p = K2.varint_decode(buf, 1, p)
-                        grab(read_streams(int(ns[0])))
-                    else:
-                        read_streams(1 + (tc & 1))
-            pos = end
-        return out
+    def test_reencode_corpus_fsst_streams_byte_exact(self):
+        found = {name: fsst_triples(tile) for name, tile in codec_corpus().items()}
+        assert {name: len(ts) for name, ts in found.items() if ts} == {"strings": 2, "structs_fsst": 1}
+        assert_fsst_reencodes(t for ts in found.values() for t in ts)
 
     @pytest.mark.parametrize(
         "fixture",
@@ -523,17 +487,10 @@ class TestFsstByteParity:
         path = f"/root/reference/test/expected/tag0x01/{fixture}"
         if not os.path.exists(path):
             pytest.skip(f"fixture {fixture} absent")
-        triples = self._triples(path)
-        checked = 0
-        for table, lens, comp in triples[:8]:
-            corpus = C.fsst_decode(table, lens, comp)
-            gt, gl, gc = C.fsst_encode(corpus)
-            assert gt == table
-            assert gl.tolist() == [int(x) for x in lens]
-            assert gc == comp
-            checked += 1
-        if checked == 0:
+        triples = fsst_triples(open(path, "rb").read())[:8]
+        if not triples:
             pytest.skip("no fsst streams in fixture")
+        assert_fsst_reencodes(triples)
 
 
 class TestInspect:
@@ -1459,6 +1416,100 @@ class TestCodecAnchors:
         # boolean byte-RLE: a literal group longer than 128 bytes
         coin = [r for r in recs["booleans_floats"] if r["column"] == "coin"]
         assert coin[0]["byte_length"] > 129
+
+
+def _mvt_polygon_tile(geometry: list[int], tags: list[int], layer_fields: bytes = b"") -> bytes:
+    """One layer with one polygon feature, one key and one value."""
+    feature = _pb_uint(1, 1) + _pb_packed(2, tags) + _pb_uint(3, 3) + _pb_packed(4, geometry)
+    layer = _pb_uint(15, 2) + _pb_bytes(1, b"l") + _pb_bytes(2, feature) + layer_fields
+    layer += _pb_bytes(3, b"k") + _pb_bytes(4, _mvt_value("int", 7))
+    return _pb_bytes(3, layer + _pb_uint(5, 4096))
+
+
+class TestMalformedMvt:
+    """Malformed MVT input raises ValueError from ``convert_mvt``, the only
+    error ``tiler.transcode_mvt_tiles`` turns into a per-tile error row."""
+
+    BOX = _mvt_commands(3, [[(0, 0), (10, 0), (10, 10)]])
+
+    def test_well_formed_tile_converts(self):
+        from maplibre_tile_spec_spark.functions import mlt_cli as CLI
+
+        la = C.decode_tile(CLI.convert_mvt(_mvt_polygon_tile(self.BOX, [0, 0])))[0]
+        assert (la.name, la.props) == ("l", {"k": [7]})
+
+    @pytest.mark.parametrize(
+        "mvt",
+        [
+            _mvt_polygon_tile([15], [0, 0]),  # a bare ClosePath
+            _mvt_polygon_tile(BOX[:-3], [0, 0]),  # a LineTo missing a parameter pair
+            _mvt_polygon_tile(BOX, [0, 1]),  # a value index past the value table
+            _mvt_polygon_tile(BOX, [0]),  # an odd tag count
+            _mvt_polygon_tile(BOX, [0, 0], _pb_uint(1, 5)),  # a name with a varint wire type
+            _mvt_polygon_tile(BOX, [0, 0])[:-4],  # a layer running past the tile
+            _pb_bytes(3, _pb_varint(1 << 3 | 2) + _pb_varint(9) + b"name"),  # a name running past its layer
+            _pb_bytes(3, _pb_varint(5 << 3) + b"\x80" * 10 + b"\x01"),  # an 11-byte varint
+        ],
+        ids=[
+            "bare_closepath", "command_past_params", "tag_past_values", "odd_tags",
+            "wrong_wire_type", "truncated_layer", "field_past_message", "long_varint",
+        ],
+    )
+    def test_malformed_tile_raises_value_error(self, mvt):
+        from maplibre_tile_spec_spark.functions import mlt_cli as CLI
+
+        with pytest.raises(ValueError):
+            CLI.convert_mvt(mvt)
+
+
+def mutate(rng: np.random.RandomState, data: bytes) -> bytes:
+    """One random truncation, splice, bit flip or byte replacement."""
+    b = bytearray(data)
+    kind = rng.randint(4)
+    if kind == 0:
+        return bytes(b[: rng.randint(len(b))])
+    if kind == 1:  # copy a random slice to a random place, or cut it out
+        i, j = sorted(rng.randint(0, len(b) + 1, 2))
+        at = rng.randint(len(b) + 1)
+        return bytes(b[:at] + b[i:j] + b[at:]) if rng.rand() < 0.5 else bytes(b[:i] + b[j:])
+    i = rng.randint(len(b))
+    if kind == 2:
+        b[i] ^= 1 << rng.randint(8)
+    else:
+        b[i] = rng.randint(256)
+    return bytes(b)
+
+
+@pytest.mark.filterwarnings("ignore::RuntimeWarning")
+class TestMalformedInputFuzz:
+    """Malformed tiles fail with ``ValueError`` only, which callers such as
+    ``tiler.transcode_mvt_tiles`` count per tile; any other exception would
+    fail a whole job. Fixed seed and budget: about 2,100 calls."""
+
+    def test_mutated_mlt_tiles_raise_only_value_error(self):
+        from maplibre_tile_spec_spark.functions import mlt_cli as CLI
+
+        rng = np.random.RandomState(12)
+        tiles = list(codec_corpus().values()) + [CLI.convert_mvt(m) for m in mvt_corpus().values()]
+        for tile in tiles:
+            for _ in range(28):
+                bad = mutate(rng, tile)
+                for read in (C.decode_tile, C.reencode_tile, C.inspect_tile):
+                    try:
+                        read(bad)
+                    except ValueError:
+                        pass
+
+    def test_mutated_mvt_tiles_raise_only_value_error(self):
+        from maplibre_tile_spec_spark.functions import mlt_cli as CLI
+
+        rng = np.random.RandomState(13)
+        for mvt in mvt_corpus().values():
+            for _ in range(60):
+                try:
+                    CLI.convert_mvt(mutate(rng, mvt))
+                except (ValueError, NotImplementedError):
+                    pass
 
 
 if __name__ == "__main__":
